@@ -1,10 +1,15 @@
 #!/usr/bin/env python
 """Headline benchmark: runs the engine's flagship queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
+local[$SPARK_GRAFT_CPUS], writes the full record to BENCH_full.json
+and prints ONE compact JSON line.
 
 Materialization uses the ``noop`` sink — full execution, no driver
 collect, no output I/O — so the number is pure engine time.
+
+This script measures and reports only. Regressions are judged
+elsewhere: by perfbench (``BENCHMARK.json``, parent vs change) and by
+the driver's round-over-round comparison of the compact lines.
 """
 
 from __future__ import annotations
@@ -19,310 +24,94 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 # Benchmark set: the queries that dominate a real workload — scan-heavy
-# agg, big joins, windows, and the LLM-pipeline operators. Extended as
-# operators land; unknown names are skipped so bench never breaks.
-# Regression-alarm noise floor: ratios where both sides are under
-# this many seconds are timer jitter on this host (rep_spread ~1.2-1.3
-# on sub-second queries at best-of-3), not signal. See the policy note
-# at the regression gate below.
-_NOISE_FLOOR_SEC = 0.3
-
-# Intentional per-round behavior changes whose timing shift is
-# expected: reported under "expected_shifts" (annotated, not silent),
-# never under "regressions". Each entry declares the LAST round whose
-# anchor predates the change — suppression self-expires once a newer
-# BENCH_r{N}.json (which already bakes the shift in) becomes the
-# comparison anchor, so a stale entry can never mask a genuine future
-# regression (review find: the earlier clear-by-hand comment had no
-# enforcement).
-_EXPECTED_SHIFTS = {
-    # r8: both ANN queries now grade their own recall in-query (the
-    # exact top-k runs alongside the index probe, r7 verdict item 4),
-    # so their wall time includes the grader term vs any anchor ≤ r7.
-    "similarity_ann_lsh": (7, "r8: in-query recall grade adds the exact grader"),
-    "similarity_ann_ivf": (7, "r8: in-query recall grade adds the exact grader"),
-    # r9: the last two rows-only dedup queries became self-grading
-    # (VERDICT r8 item 2) — the exact-Jaccard grader (the full
-    # dedup_ngram_jaccard inverted-index join) now runs inside the
-    # timed query vs any anchor ≤ r8.
-    "dedup_near_minhash": (8, "r9: in-query recall grade adds the exact-Jaccard grader"),
-    "dedup_simhash": (8, "r9: in-query recall grade adds the exact-Jaccard grader"),
-}
-
-# Self-attribution (r13, verdict item 4): the r11 and r12 rounds both
-# attributed >1.25x vs_prev movers BY HAND in BUILDLOG (plan
-# fingerprint byte-identical + loadavg evidence -> host contention).
-# The artifact now does that itself: every mover gets the same two
-# pieces of evidence and a mechanical verdict, and the whole run gets
-# a load-quality stamp. The in-run load_reps samples include the
-# bench's OWN Spark activity (32 local threads), so the run-level
-# quiet/loaded stamp keys off load1 at PROCESS START — the external-
-# contention witness the builder's quiet-host rule actually checks.
-_MOVER_RATIO = 1.25
-_QUIET_START_LOAD1 = 0.5  # loadavg decays slowly; < 0.5 at start ≈ idle host
-_LOAD_SHIFT_DELTA = 2.0  # mean load1 delta between rounds that reads as a shift
-_SETTLE_MAX_WAIT_S = 120.0  # bounded settle wait before mover re-measure
-_SETTLE_POLL_S = 10.0
-
-# DECLARED plan changes (r15, r14 verdict item 4): when a commit
-# deliberately changes a pinned physical plan, record it here in the
-# SAME commit (mirror of tests/test_plan_invariants.py's update rule)
-# so the artifact separates intended plan-change movers from
-# accidental ones — a reader should not need to cross-reference the
-# pin test. Cleared when the change has appeared in a driver artifact.
-_EXPECTED_PLAN_CHANGES: dict[str, str] = {
-    # (r15 declarations cleared: all six appeared in the r15 driver
-    # artifact, which is now the comparison anchor.)
-    "dedup_near_minhash": (
-        "r16 opt: the audit-slice grader's two orientation joins "
-        "fused into ONE pass over the index (orientation decided in "
-        "the join filter; audit side still the broadcast build) — "
-        "one BroadcastExchange fewer, shuffles unchanged"
-    ),
-    "dedup_simhash": (
-        "r16 opt: same grader one-pass fuse (shared "
-        "audit_exact_jaccard_pairs); plus the corpus-family floor "
-        "probe is memoized per (session, corpus) — one distributed "
-        "job fewer per invocation, floor value identical"
-    ),
-}
-
-
-def load_quality(load1_start: float) -> dict:
-    """Run-level load stamp for the artifact (schema pinned in
-    tests/test_round13_fixes.py)."""
-    return {
-        "load1_start": load1_start,
-        "quiet_start_bar": _QUIET_START_LOAD1,
-        "verdict": (
-            "quiet-start"
-            if 0 <= load1_start < _QUIET_START_LOAD1
-            else ("unknown" if load1_start < 0 else "loaded-start")
-        ),
-        "note": (
-            "in-run load_reps include the bench's own Spark activity; "
-            "load1 at process start is the external-contention witness"
-        ),
-    }
-
-
-def attribute_movers(
-    vs_prev: dict[str, float],
-    timings: dict[str, float],
-    prev: dict[str, float],
-    plan_fp: dict[str, str],
-    prev_plan_fp: dict[str, str],
-    load_reps: dict[str, list[float]],
-    prev_load_reps: dict[str, list[float]],
-    spreads: dict[str, float],
-    noise_floor: float = _NOISE_FLOOR_SEC,
-    prev_norm_version: int | None = None,
-) -> dict[str, dict]:
-    """Per-mover evidence + mechanical verdict for every above-floor
-    >_MOVER_RATIO shift (either direction matters, but only slowdowns
-    alarm — speedups are annotated for the same audit trail).
-
-    Verdicts: ``plan-change-expected`` (fingerprint differs AND the
-    change is declared in _EXPECTED_PLAN_CHANGES — intended),
-    ``plan-change`` (fingerprint differs, undeclared — audit the
-    plan), ``load-shift`` (fingerprint identical, mean load1 at this
-    query's reps moved > _LOAD_SHIFT_DELTA between rounds — host
-    contention), ``loaded-both`` (identical plan, inter-round load
-    delta small but BOTH rounds ran loaded — the honest verdict when
-    neither timing is trustworthy; r13 verdict item 5),
-    ``one-side-loaded`` (identical plan, small inter-round delta, but
-    exactly one round ran loaded — that side's timing is untrustworthy
-    on its own; r14 ADVICE: these previously fell into
-    ``unexplained``, whose definition they contradict),
-    ``unexplained`` (identical plan, both rounds quiet, comparable
-    load — investigate), ``fp-norm-upgraded`` (the fingerprint
-    NORMALIZATION rules changed between the rounds — planfp
-    NORM_VERSION differs — so fingerprints are incomparable and a
-    textual mismatch proves nothing; r15: the distinct-agg sort rule
-    re-hashed every plan), ``no-prev-fingerprint`` (anchor predates
-    fingerprint recording).
-    """
-    from frinesis_spark import planfp as _pfp
-
-    norm_comparable = (
-        prev_norm_version is None or prev_norm_version == _pfp.NORM_VERSION
-    )
-
-    def _mean(xs: list[float]) -> float | None:
-        xs = [x for x in xs if x >= 0]
-        return round(sum(xs) / len(xs), 2) if xs else None
-
-    out: dict[str, dict] = {}
-    for name, ratio in vs_prev.items():
-        if ratio <= _MOVER_RATIO and ratio >= 1 / _MOVER_RATIO:
-            continue
-        if max(timings.get(name, 0.0), prev.get(name, 0.0)) < noise_floor:
-            continue
-        prev_fp = prev_plan_fp.get(name)
-        if not norm_comparable:
-            prev_fp = None  # void: hashed under different rules
-        fp_same = prev_fp is not None and prev_fp == plan_fp.get(name)
-        cur_load = _mean(load_reps.get(name, []))
-        prv_load = _mean(prev_load_reps.get(name, []))
-        if prev_fp is None:
-            verdict = (
-                "fp-norm-upgraded"
-                if not norm_comparable and prev_plan_fp.get(name) is not None
-                else "no-prev-fingerprint"
-            )
-        elif not fp_same:
-            verdict = (
-                "plan-change-expected"
-                if name in _EXPECTED_PLAN_CHANGES
-                else "plan-change"
-            )
-        elif (
-            cur_load is not None
-            and prv_load is not None
-            and abs(cur_load - prv_load) > _LOAD_SHIFT_DELTA
-        ):
-            verdict = "load-shift"
-        elif (
-            cur_load is not None
-            and prv_load is not None
-            and cur_load >= _QUIET_START_LOAD1
-            and prv_load >= _QUIET_START_LOAD1
-        ):
-            verdict = "loaded-both"
-        elif (
-            cur_load is not None
-            and prv_load is not None
-            and (
-                cur_load >= _QUIET_START_LOAD1
-                or prv_load >= _QUIET_START_LOAD1
-            )
-        ):
-            verdict = "one-side-loaded"
-        else:
-            verdict = "unexplained"
-        out[name] = {
-            "ratio": ratio,
-            "declared": _EXPECTED_PLAN_CHANGES.get(name),
-            "plan_fp_identical": fp_same if prev_fp is not None else None,
-            "load1_at_reps": load_reps.get(name, []),
-            "prev_load1_at_reps": prev_load_reps.get(name, []),
-            "mean_load1": cur_load,
-            "prev_mean_load1": prv_load,
-            "rep_spread": spreads.get(name),
-            "verdict": verdict,
-        }
-    return out
-
-
+# agg, big joins, windows, the whole TPC-H 22 (rolled up in
+# tpch_total), streaming and the LLM-pipeline operators. Unknown names
+# are skipped so bench never breaks. ORDER MATTERS: the compact line
+# carries a fixed prefix of this list (COMPACT_QUERIES below), so the
+# names the driver has already recorded come first — the 61 of the
+# r16 compact line in its order — and the rest follow.
 HEADLINE = [
-    # r8 additions
-    "join_bloom_prefilter",
-    "text_url_canonicalize",
-    "time_resample_interp",
-    "analytics_ab_test",
-    "agg_mode_frequent",
-    "source_compressed_roundtrip",
-    "window_ewma_smooth",
-    "join_interval_buckets",
-    "agg_group_sum",
-    "join_multiway_star",
-    "join_broadcast",
-    "join_range_theta",
-    "window_rank_topk",
-    "agg_distinct",
-    "agg_approx_quantile",
-    "sort_limit",
-    "udf_python",
-    "dedup_exact",
-    "dedup_near_minhash",
+    "stream_dedup_bounded",  # bounded-state production dedup
+    "stream_incremental_batches",
+    "stream_stream_join",  # hardest streaming shape
+    "similarity_ann_lsh",
+    "dedup_embedding_ann",
+    "dedup_cluster_cc",
+    "dedup_embedding_ann_audit",  # the production grading shape
     "dedup_simhash",
+    "dedup_near_minhash",
+    "stream_watermark_late",  # canonical stateful operator
+    "similarity_ann_ivf",
+    "window_anomaly_zscore",
+    "window_rolling_quantile",  # the one frame-buffering window
+    "agg_approx_quantile",
+    "text_repetition_filter",  # two token-keyed partial-agg shuffles
+    "agg_group_sum",
+    "join_range_theta",
+    "sql_tpch_q11",
     "dedup_ngram_jaccard",
     "dedup_containment_ngram",
-    "window_anomaly_zscore",
+    "source_compressed_roundtrip",
+    "join_interval_buckets",
+    "join_multiway_star",
+    "stream_dedup_stateful",  # canonical stateful operator
+    "dedup_substring_chunks",  # two chunk_hash shuffles
     "dedup_embedding_cosine",
-    "dedup_embedding_ann",
-    "dedup_embedding_ann_audit",  # r12: the production grading shape
-    "similarity_topk_cosine",
-    "similarity_ann_lsh",
-    "text_analysis_stats",
-    "stream_tumbling_agg",
-    "stream_incremental_batches",
-    # r11 additions: the streaming-engine family is headline-worthy
-    # now that state partitions are volume-sized — stream-stream join
-    # is the hardest streaming shape the engine runs, and the
-    # watermark/dedup pair are the canonical stateful operators.
-    "stream_stream_join",
-    "stream_watermark_late",
-    "stream_dedup_stateful",
-    "stream_dedup_bounded",  # r12: the bounded-state production dedup
-    "join_asof",
-    "merge_upsert",
-    "time_rollup_hypertable",
-    "window_time_range",
-    "dedup_cluster_cc",
-    "similarity_ann_ivf",
-    "pipeline_llm_prep",
-    "sql_tpch_q3",
-    "sink_partitioned_parquet",
-    "join_bucketed_colocated",
-    "explode_token_freq",
-    "time_ohlc_bars",
-    "embedding_quantize_int8",
-    "time_gapfill_locf",
-    "window_session_islands",
-    "analytics_retention_cohort",
-    "agg_grouping_sets",
-    "merge_scd2",
     "dedup_incremental_jaccard",
-    # Correlated-subquery SQL (r4 verdict #3): Q21 is the heaviest
-    # decorrelation plan (triple lineitem correlation), Q17 the
-    # scalar-subquery-per-group shape — a plan regression in either
-    # would otherwise be invisible to the bench.
-    "sql_tpch_q21",
-    "sql_tpch_q17",
-    # r6: the two heaviest of the five new TPC-H shapes — Q18's
-    # IN-over-grouped-HAVING semi-join re-aggregates lineitem twice,
-    # Q19's OR-of-ANDs is the disjunctive-pushdown guard.
-    "sql_tpch_q18",
-    "sql_tpch_q19",
-    # r6 suite completion: Q2 is the heaviest decorrelation of the new
-    # seven (correlated MIN with its own 4-table join chain), Q8 the
-    # widest join tree (8 tables, nation twice).
-    "sql_tpch_q2",
-    "sql_tpch_q8",
-    # r6 LLM-pipeline additions: repetition filter (two token-keyed
-    # partial-agg shuffles) and sequence packing (bucket window).
-    "text_repetition_filter",
-    "tokenize_pack_sequences",
-    # r7 (VERDICT r6 #5): the REST of the TPC-H 22, so the whole SQL
-    # suite — the most user-visible surface — is under the driver's
-    # per-query regression check every round, not just PLANS.md diffs.
-    # (q2/q3/q8/q17/q18/q19/q21 already appear above.)
-    "sql_tpch_q1",
-    "sql_tpch_q4",
-    "sql_tpch_q5",
-    "sql_tpch_q6",
-    "sql_tpch_q7",
-    "sql_tpch_q9",
-    "sql_tpch_q10",
-    "sql_tpch_q11",
-    "sql_tpch_q12",
-    "sql_tpch_q13",
-    "sql_tpch_q14",
-    "sql_tpch_q15",
     "sql_tpch_q16",
+    "agg_distinct",
+    "sql_tpch_q21",  # heaviest decorrelation (3x lineitem)
+    "sql_tpch_q5",
+    "similarity_topk_cosine",
+    "sql_tpch_q2",  # correlated MIN over a 4-table chain
+    "time_resample_interp",
+    "sink_partitioned_parquet",
+    "join_bloom_prefilter",
+    "sql_tpch_q18",  # IN over grouped HAVING: lineitem twice
+    "udf_python",
     "sql_tpch_q20",
+    "sql_tpch_q9",
+    "sql_tpch_q3",
+    "time_rollup_hypertable",
+    "window_ewma_smooth",
+    "time_downsample_m4",  # scan-bound single agg
+    "merge_upsert",
+    "time_ohlc_bars",
+    "analytics_retention_cohort",
+    "time_gapfill_locf",
+    "sql_tpch_q15",
+    "analytics_ab_test",
+    "join_bucketed_colocated",
+    "sql_tpch_q1",
+    "sql_tpch_q17",  # scalar subquery per group
+    "sql_tpch_q7",
+    "text_analysis_stats",
+    "merge_scd2",
+    "sql_tpch_q10",
     "sql_tpch_q22",
-    # r7 additions: chunk-hash substring dedup (two chunk_hash
-    # shuffles over ~|corpus|/64 rows — the heaviest new scan shape),
-    # M4 downsampling (scan-bound single agg), and the deterministic
-    # shuffle-shard export (one shard_id shuffle + per-shard window).
-    "dedup_substring_chunks",
-    "time_downsample_m4",
-    "pipeline_shuffle_shard",
-    # rolling quantile: the one frame-buffering window evaluator in
-    # the suite — its per-step re-sort cost must stay visible.
-    "window_rolling_quantile",
+    "join_asof",
+    "join_broadcast",
+    "sql_tpch_q13",
+    "text_url_canonicalize",
+    "agg_mode_frequent",
+    "window_rank_topk",
+    "sort_limit",
+    "dedup_exact",
+    "stream_tumbling_agg",
+    "window_time_range",
+    "pipeline_llm_prep",
+    "explode_token_freq",
+    "embedding_quantize_int8",
+    "window_session_islands",
+    "agg_grouping_sets",
+    "sql_tpch_q19",  # OR-of-ANDs disjunctive-pushdown guard
+    "sql_tpch_q8",  # widest join tree (8 tables)
+    "tokenize_pack_sequences",  # bucket window
+    "sql_tpch_q4",
+    "sql_tpch_q6",
+    "sql_tpch_q12",
+    "sql_tpch_q14",
+    "pipeline_shuffle_shard",  # shard_id shuffle + per-shard window
 ]
 
 # Queries served from the per-(session, corpus) derived-artifact caches
@@ -349,13 +138,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-
-    # Sampled BEFORE the Spark session exists: the one load1 reading
-    # the bench's own activity cannot have inflated yet.
-    try:
-        load1_start = round(os.getloadavg()[0], 2)
-    except OSError:  # pragma: no cover — getloadavg is POSIX-only
-        load1_start = -1.0
 
     from frinesis_spark import registry
     from frinesis_spark.session import get_spark
@@ -405,12 +187,6 @@ def main() -> None:
     for _t in _TABLES:  # the canonical list — never a local copy (r9)
         _catalog_table(spark, sf_dir, _t).count()
 
-    # Best-of-N per query: the shared box shows ±2x run-to-run noise
-    # (CPU steal), so a single sample conflates engine speed with
-    # neighbor load. Min over reps is the standard estimator for
-    # achievable wall time. Three reps (was two): an r4 contended run
-    # showed a 5x phantom on an unchanged query surviving best-of-2;
-    # the third sample makes one noisy rep per query survivable.
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 
     def run_once(name: str) -> float:
@@ -442,8 +218,7 @@ def main() -> None:
     # dirs and their first-touch page-cache cost
     # (source_compressed_roundtrip 2.5×, text_url_canonicalize 5.3×).
     # One untimed rep each puts every such build before the timer, so
-    # rep_spread measures scheduling jitter only and the 0.3 s
-    # regression floor stays trustworthy.
+    # rep_spread measures scheduling jitter only.
     for name in HEADLINE:
         if name in queries:
             run_once(name)
@@ -455,34 +230,14 @@ def main() -> None:
     # run showed a 5x phantom on an unchanged query surviving
     # best-of-2. The warmup sweep above restored every cached artifact
     # and pre-built every session artifact, so every sample here is
-    # genuinely warm.
+    # genuinely warm. raw_reps keeps every rep's wall time (not just
+    # the min), so a contended run shows its own outlier structure.
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
-    # Evidence channels for cross-round attribution (r10 verdict item
-    # 1): the r10 driver bench flagged 12 queries >=1.5x vs r9 while a
-    # same-HEAD local run showed zero — host contention, but nothing
-    # on record could PROVE it. Three artifacts fix that permanently:
-    #   raw_reps   — every rep's wall time (not just the min), so a
-    #                contended run shows its own outlier structure;
-    #   load_reps  — os.getloadavg()[0] sampled before each rep, the
-    #                direct host-contention witness;
-    #   plan_fp    — normalized physical-plan fingerprint per query
-    #                (frinesis_spark/planfp.py). Identical fp across
-    #                rounds + elevated load = drift, closed; changed
-    #                fp = a real plan change to audit.
     raw_reps: dict[str, list[float]] = {}
-    load_reps: dict[str, list[float]] = {}
-    plan_fp: dict[str, str] = {}
-    from frinesis_spark import planfp as _planfp
-
-    def _load1() -> float:
-        try:
-            return round(os.getloadavg()[0], 1)
-        except OSError:  # pragma: no cover — getloadavg is POSIX-only
-            return -1.0
     # A HEADLINE name missing from the registry is a rename that would
-    # otherwise silently shrink the total and drop the query from the
-    # regression alarm (r9 review wave 5) — surface it in the record.
+    # otherwise silently shrink the total (r9 review wave 5) — surface
+    # it in the record.
     unknown_headline = sorted(set(HEADLINE) - set(queries))
     if unknown_headline:
         print(
@@ -492,20 +247,9 @@ def main() -> None:
     for name in HEADLINE:
         if name not in queries:
             continue
-        samples, loads = [], []
-        for _ in range(reps):
-            loads.append(_load1())
-            samples.append(run_once(name))
+        samples = [run_once(name) for _ in range(reps)]
         timings[name] = round(min(samples), 3)
         raw_reps[name] = [round(s, 3) for s in samples]
-        load_reps[name] = loads
-        # Fingerprint OUTSIDE the timed region: building the DataFrame
-        # re-runs only plan construction (plus any cached-artifact
-        # lookups, all warm here); .explain-level planning, no jobs.
-        try:
-            plan_fp[name] = _planfp.fingerprint(queries[name](spark, sf_dir))
-        except Exception as exc:  # never let evidence break the bench
-            plan_fp[name] = f"<error: {type(exc).__name__}>"
         # max/min ratio across reps (r4 verdict #8): a reported 1.1-1.2x
         # cross-round drift on a query whose own reps spread 1.5x is
         # noise by the bench's own evidence; a drift larger than the
@@ -564,10 +308,6 @@ def main() -> None:
         "reps": reps,
         "sf": sf,
         "raw_reps": raw_reps,
-        "load_reps": load_reps,
-        "plan_fp": plan_fp,
-        "planfp_norm_version": _planfp.NORM_VERSION,
-        "load_quality": load_quality(load1_start),
     }
     # Per-table split-staging cost (r16, VERDICT r15 item 4): the
     # once-per-process row-group relayout runs outside every per-query
@@ -586,124 +326,17 @@ def main() -> None:
     if unknown_headline:
         full["unknown_headline"] = unknown_headline
 
-    # Regression anchor: compare against the newest BENCH_r{N}.json
-    # (same sf only) and flag >1.5x per-query slowdowns. Ratios ride
-    # along in the record so every round's bench is self-auditing.
-    #
-    # Noise-floor policy (r7 verdict item 8): this host's timer noise
-    # on sub-second queries runs rep_spread ~1.2-1.3 even at
-    # best-of-3, so a 1.5x ratio between two sub-floor times is
-    # indistinguishable from scheduling jitter. The alarm therefore
-    # only fires when the SLOWER side of the comparison carries at
-    # least _NOISE_FLOOR_SEC of work; sub-floor ratios still ride
-    # along in vs_prev (nothing is hidden), they just can't trip the
-    # alarm. Intentional behavior changes are declared per-round in
-    # _EXPECTED_SHIFTS and reported under "expected_shifts" instead of
-    # "regressions" — an annotated shift is not an alarm, but it is
-    # never silent either.
-    regressions: dict[str, float] = {}
-    loaded = _load_prev_bench(Path(__file__).resolve().parent, sf)
-    if loaded:
-        prev_round, prev = loaded
-        vs_prev = {
-            name: round(t / prev[name], 2)
-            for name, t in timings.items()
-            if prev.get(name)
-        }
-        full["vs_prev"] = vs_prev
-        flagged = {
-            name: r
-            for name, r in vs_prev.items()
-            if r > 1.5 and max(timings[name], prev[name]) >= _NOISE_FLOOR_SEC
-        }
-
-        def _expected(n: str) -> bool:
-            entry = _EXPECTED_SHIFTS.get(n)
-            return entry is not None and prev_round <= entry[0]
-
-        regressions = {n: r for n, r in flagged.items() if not _expected(n)}
-        full["regressions"] = regressions
-        full["noise_floor_sec"] = _NOISE_FLOOR_SEC
-        full["prev_round"] = prev_round
-        full["expected_shifts"] = {
-            n: {"ratio": flagged[n], "why": _EXPECTED_SHIFTS[n][1]}
-            for n in flagged
-            if _expected(n)
-        }
-        # Self-attribution of movers (r13): evidence comes from the
-        # previous committed BENCH_full.json (read here, BEFORE this
-        # run overwrites it) — the prior run's plan fingerprints and
-        # per-rep load samples.
-        try:
-            _prev_full = json.loads(
-                (Path(__file__).resolve().parent / "BENCH_full.json")
-                .read_text()
-            )
-            if _prev_full.get("sf") != sf:
-                _prev_full = {}
-        except (OSError, json.JSONDecodeError):
-            _prev_full = {}
-        full["mover_attribution"] = attribute_movers(
-            vs_prev,
-            timings,
-            prev,
-            plan_fp,
-            _prev_full.get("plan_fp") or {},
-            load_reps,
-            _prev_full.get("load_reps") or {},
-            spreads,
-            prev_norm_version=_prev_full.get(
-                "planfp_norm_version",
-                1 if _prev_full.get("plan_fp") else None,
-            ),
-        )
-        full["expected_plan_changes"] = _EXPECTED_PLAN_CHANGES
-        # Settled re-measure (r15, r14 verdict item 7): three straight
-        # driver rounds started loaded, and absolute regressions can
-        # hide under load noise in both directions. When THIS run
-        # started loaded, wait for the host to settle (bounded) and
-        # re-run each flagged SLOWDOWN mover once; the artifact then
-        # carries a second timing whose load context is recorded, so a
-        # load-inflated mover self-clears and a real one survives.
-        slow_movers = [
-            n
-            for n, att in full["mover_attribution"].items()
-            if att["ratio"] > _MOVER_RATIO
-        ]
-        if load1_start >= _QUIET_START_LOAD1 and slow_movers:
-            waited = 0.0
-            while waited < _SETTLE_MAX_WAIT_S:
-                try:
-                    if os.getloadavg()[0] < _QUIET_START_LOAD1:
-                        break
-                except OSError:
-                    break
-                time.sleep(_SETTLE_POLL_S)
-                waited += _SETTLE_POLL_S
-            settle_load = _load1()
-            for name in slow_movers:
-                t = run_once(name)
-                att = full["mover_attribution"][name]
-                att["settled"] = {
-                    "waited_s": round(waited, 1),
-                    "load1_at_rerun": settle_load,
-                    "time_s": round(t, 3),
-                    "ratio_settled": (
-                        round(t / prev[name], 2) if prev.get(name) else None
-                    ),
-                }
-
     # Two outputs (r5 verdict #1 — BENCH_r05 was lost to truncation):
     # the FULL record goes to a committed repo file, and stdout gets a
-    # COMPACT line guaranteed to fit the driver's 2000-char tail
-    # capture (r5's line, grown by rep_spread + vs_prev, exceeded it
-    # and the round's per-query seconds were unrecoverable).
+    # COMPACT line that fits the driver's 2000-char tail capture.
     full_path = Path(__file__).resolve().parent / "BENCH_full.json"
     full_path.write_text(json.dumps(full, indent=1) + "\n")
     print(compact_line(
-        timings, regressions, sf, total,
+        {n: timings[n] for n in COMPACT_QUERIES if n in timings},
+        total,
+        tpch_total,
+        sf,
         sink_rps=sink.get("records_per_sec") if sink else None,
-        anchor_names=_prev_compact_names(Path(__file__).resolve().parent, sf),
     ))
 
 
@@ -874,157 +507,48 @@ def _sink_throughput(
 
 
 def compact_line(
-    timings: dict[str, float],
-    regressions: dict[str, float],
-    sf: float,
+    queries: dict[str, float],
     total: float,
+    tpch_total: float,
+    sf: float,
     sink_rps: int | None = None,
-    anchor_names: frozenset | set | None = None,
 ) -> str:
-    """The stdout line, guaranteed to fit the driver's 2000-char tail
-    capture (tests/test_round6_fixes.py pins the worst case).
-
-    ``anchor_names`` (r16, VERDICT r15 item 8): the query names the
-    PREVIOUS round's driver-recorded compact line carried. The budget
-    keeps those before any unanchored sub-floor query, so the driver's
-    round-over-round comparison — which reads only the compact lines —
-    stops churning anchors: r15's slowest-first-only budgeting dropped
-    23 queries that had simply gotten FASTER, and the r15 PERF file
-    showed 47 spurious dropped/new rows."""
+    """The stdout line the driver captures. ``value`` and
+    ``tpch_total`` cover every headline query; ``queries`` carries
+    the timings it is given (main passes the COMPACT_QUERIES subset)."""
     compact = {
         "metric": "headline_queries_total_wall",
         "value": total,
         "unit": "sec",
-        "queries": {n: round(t, 2) for n, t in timings.items()},
-        "tpch_total": round(
-            sum(t for n, t in timings.items() if n.startswith("sql_tpch_q")),
-            3,
-        ),
+        "queries": {n: round(t, 2) for n, t in queries.items()},
+        "tpch_total": tpch_total,
         "sf": sf,
-        "regressions": regressions,
         "full": "BENCH_full.json",
     }
     if sink_rps is not None:
         compact["sink_rps"] = sink_rps
-    line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > 1800:  # belt-and-braces: never outgrow the capture again
-        # The regression alarm is the one thing the tail capture must
-        # never lose (r6 review fix) — cap it at the 20 worst ratios
-        # (annotated) rather than letting a mass-regression map starve
-        # everything else out of the line.
-        if len(regressions) > 20:
-            compact["regressions"] = {
-                n: r for n, r in sorted(
-                    regressions.items(), key=lambda kv: -kv[1]
-                )[:20]
-            }
-            compact["regressions_truncated"] = len(regressions) - 20
-        # Then BUDGET the queries map (r8: the headline grew past what
-        # fits whole): keep as many entries as fit, in priority order
-        # (r16) — (0) above-floor queries slowest-first (the
-        # regression alarm's population must never lose an anchor),
-        # (1) queries the previous compact line anchored (keeping them
-        # means the driver comparison sees no spurious drop), (2) the
-        # rest. Within each class slowest-first, name tie-break, so
-        # the kept set is deterministic and near-stable across rounds.
-        anchors = anchor_names or frozenset()
-        ordered = sorted(
-            compact["queries"].items(),
-            key=lambda kv: (
-                0
-                if kv[1] >= _NOISE_FLOOR_SEC
-                else (1 if kv[0] in anchors else 2),
-                -kv[1],
-                kv[0],
-            ),
-        )
-        base = dict(compact)
-        base["queries"] = {}
-        # Pre-reserve the annotation key: appending it AFTER budgeting
-        # would push the final line past the target (review find).
-        base["queries_truncated"] = len(timings)
-        budget = 1800 - len(json.dumps(base, separators=(",", ":")))
-        kept: dict = {}
-        used = 0
-        for n, t in ordered:
-            entry = len(json.dumps({n: t}, separators=(",", ":")))
-            if used + entry > budget:
-                break
-            kept[n] = t
-            used += entry
-        compact["queries"] = kept
-        if len(kept) < len(timings):
-            compact["queries_truncated"] = len(timings) - len(kept)
-            # Enforce the claim the budget rests on: dropped queries
-            # must sit under the regression noise floor, or they lose
-            # their next-round anchor while still being alarm-eligible
-            # (r9 review wave 5: r8's 7 drops were sub-floor only by
-            # luck). Above-floor drops are surfaced by name.
-            dropped = {n: t for n, t in timings.items() if n not in kept}
-            over_floor = {
-                n: t for n, t in dropped.items() if t >= _NOISE_FLOOR_SEC
-            }
-            if over_floor:
-                print(
-                    "WARNING: compact-line budget dropped ABOVE-FLOOR "
-                    f"queries (no next-round anchor): {over_floor}",
-                    file=sys.stderr,
-                )
-        line = json.dumps(compact, separators=(",", ":"))
-    return line
+    return json.dumps(compact, separators=(",", ":"))
 
 
-def _prev_compact_names(repo: Path, sf: float) -> frozenset:
-    """Query names the newest same-sf BENCH_r{N}.json's compact line
-    carried — the anchor set the driver's next comparison will look
-    for (compact_line keeps these under budget pressure, r16)."""
-    loaded = _load_prev_compact(repo, sf)
-    return frozenset(loaded[1]) if loaded else frozenset()
+def _worst_case_line(names: list[str]) -> str:
+    """The compact line for ``names`` with every number at its widest:
+    each query 999.99 s, five-digit totals, a 100.0 sf and a
+    seven-digit sink rate."""
+    return compact_line(
+        dict.fromkeys(names, 999.99), 99999.999, 99999.999, 100.0, 9_999_999
+    )
 
 
-def _load_prev_compact(repo: Path, sf: float) -> tuple[int, dict] | None:
-    """(round, per-query times) of the newest same-sf driver-recorded
-    compact line, WITHOUT the BENCH_full backfill."""
-    best: tuple[int, dict] | None = None
-    for p in repo.glob("BENCH_r*.json"):
-        m = re.match(r"BENCH_r(\d+)\.json", p.name)
-        if not m:
-            continue
-        try:
-            parsed = json.loads(p.read_text()).get("parsed") or {}
-        except (OSError, json.JSONDecodeError):
-            continue
-        if parsed.get("sf") != sf or not parsed.get("queries"):
-            continue
-        n = int(m.group(1))
-        if best is None or n > best[0]:
-            best = (n, parsed["queries"])
-    return best
-
-
-def _load_prev_bench(repo: Path, sf: float) -> tuple[int, dict] | None:
-    """(round, per-query times) from the newest BENCH_r{N}.json at the
-    same sf — the round number drives _EXPECTED_SHIFTS self-expiry.
-
-    The compact driver-recorded line BUDGETS its queries map, so a
-    growing headline set drops its fastest tail from BENCH_r{N}. The
-    committed BENCH_full.json (read HERE, before this run overwrites
-    it) carries every query — its same-sf entries backfill the
-    missing anchors so a compact-dropped query still gets a vs_prev
-    ratio and stays alarm-eligible next round (r9 review wave 5: the
-    old behavior silently un-anchored the dropped tail)."""
-    best = _load_prev_compact(repo, sf)
-    if best is None:
-        return None
-    try:
-        prev_full = json.loads((repo / "BENCH_full.json").read_text())
-    except (OSError, json.JSONDecodeError):
-        return best
-    if prev_full.get("sf") != sf or not prev_full.get("queries"):
-        return best
-    merged = dict(prev_full["queries"])
-    merged.update(best[1])  # the driver-recorded times win on overlap
-    return (best[0], merged)
+# The compact line's per-query names: the longest HEADLINE prefix
+# whose worst-case line fits 1800 chars (the driver keeps the last
+# 2000). Fixed, so no name drops from or appears in the driver's
+# comparison whatever the timings; BENCH_full.json has them all.
+COMPACT_MAX_CHARS = 1800
+COMPACT_QUERIES = next(
+    HEADLINE[:n]
+    for n in range(len(HEADLINE), -1, -1)
+    if len(_worst_case_line(HEADLINE[:n])) <= COMPACT_MAX_CHARS
+)
 
 
 if __name__ == "__main__":

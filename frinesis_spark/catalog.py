@@ -298,8 +298,13 @@ def _split_staged_path(sf_dir: str, name: str) -> str:
                 # changes a timestamp column's parquet type (INT96 →
                 # TIMESTAMP(NANOS)) would reroute the read through the
                 # legacy nanos branch — discard it, keep the original.
-                if _timestamp_types_preserved(
-                    files[0], os.path.join(outdir, "part-00000.parquet")
+                # Every file is checked: one INT96 file anywhere in a
+                # multi-file table is enough to reroute the read.
+                if all(
+                    _timestamp_types_preserved(
+                        f, os.path.join(outdir, f"part-{i:05d}.parquet")
+                    )
+                    for i, f in enumerate(files)
                 ):
                     staged = outdir
                 else:

@@ -341,7 +341,7 @@ ORACLE = {
                    AS n_tokens
         FROM starts
     """,
-    "scalar_variant_shred": """
+    "scalar_variant_shred": r"""
         WITH payloads AS (
             -- json_object mirrors the Spark side's to_json(struct):
             -- proper escaping of event_type (a quote/backslash must
@@ -404,7 +404,7 @@ ORACLE = {
                CAST(CEIL(o_totalprice / 100.0) AS BIGINT) AS price_centi_ceil
         FROM orders
     """,
-    "scalar_array_map_json": """
+    "scalar_array_map_json": r"""
         WITH doc_side AS (
             SELECT doc_id AS row_id,
                    CAST(LEN(STRING_SPLIT(text, ' ')) AS BIGINT) AS n_tokens,
@@ -434,7 +434,7 @@ ORACLE = {
         SELECT d.row_id, n_tokens, mentions_data, first_token, k_json, k_map, n_keys
         FROM doc_side d JOIN event_side e ON d.row_id = e.row_id
     """,
-    "scalar_conditional_regex": """
+    "scalar_conditional_regex": r"""
         SELECT o_orderkey,
                CASE WHEN o_totalprice < 50000 THEN 'small'
                     WHEN o_totalprice < 200000 THEN 'medium'

@@ -1,233 +1,6 @@
-"""Normalized physical-plan fingerprints (r10 verdict item 1).
-
-The round-10 driver bench flagged 12 queries >=1.5x slower while the
-same-HEAD local bench showed zero regressions — a host-contention
-signature that could not be *proven* because nothing recorded whether
-the physical plans had changed between rounds. This module makes plan
-identity a first-class, hashable artifact: ``fingerprint(df)`` returns
-a short stable hash of the query's physical plan with every
-run-varying token (expression IDs, plan IDs, temp paths, object
-addresses, statistics, timestamps) normalized away.
-
-``bench.py`` records a fingerprint per headline query in
-``BENCH_full.json`` every round, so any future cross-round timing
-shift can be attributed in one comparison: identical fingerprint =>
-same plan => the shift is environmental; different fingerprint => a
-real plan change to audit. ``tools/plan_fp_probe.py`` computes the
-same fingerprints against an arbitrary source tree (e.g. a git
-worktree of a previous round) for retroactive attribution.
-
-Determinism notes:
-- Under AQE the pre-execution ``executedPlan`` is the
-  ``AdaptiveSparkPlan isFinalPlan=false`` wrapper around the initial
-  plan — deterministic for fixed code + data layout, which is exactly
-  the identity we want (the *compiled* plan, before runtime re-plan).
-- exprIds (``#123``, ``#123L``) are assigned by a global counter and
-  vary with session history; normalized to ``#x``.
-- Roundtrip queries read back from per-run temp dirs; any
-  ``file:/...`` or ``/tmp/...`` token is normalized to a placeholder.
-"""
+"""Physical-plan text of a DataFrame, for plan-shape assertions."""
 
 from __future__ import annotations
-
-import hashlib
-import re
-
-# Normalization-rule version, recorded in BENCH_full.json: fingerprints
-# hashed under different versions are NOT comparable, and
-# bench.attribute_movers says so ("fp-norm-upgraded") instead of crying
-# plan-change on every query the round a rule lands. Bump when a rule
-# changes what existing plans hash to.
-#   v2 (r15): distinct-aggregate group order normalized — see
-#   _sort_set_lists.
-NORM_VERSION = 2
-
-_SUBS: list[tuple[re.Pattern, str]] = [
-    # expression IDs: col#123, col#123L — session-history dependent
-    (re.compile(r"#\d+L?"), "#x"),
-    # plan / subquery / CTE ids
-    (re.compile(r"plan_id=\d+"), "plan_id=x"),
-    (re.compile(r"\[id=#?\d+\]"), "[id=x]"),
-    (re.compile(r"cte\[\d+\]"), "cte[x]"),
-    (re.compile(r"exprId=\d+"), "exprId=x"),
-    # JVM object addresses in udf/lambda reprs
-    (re.compile(r"@[0-9a-fA-F]{6,}"), "@x"),
-    (re.compile(r"0x[0-9a-fA-F]{6,}"), "0xX"),
-    # per-run paths: scratch dirs, roundtrip temp outputs, warehouse
-    (re.compile(r"file:[^\s,\]\)\}]*"), "<path>"),
-    (re.compile(r"/tmp/[^\s,\]\)\}]*"), "<tmp>"),
-    # optimizer statistics annotations (data-stat dependent formatting)
-    (re.compile(r"Statistics\([^)]*\)"), "Statistics(x)"),
-    # embedded timestamps (e.g. current_timestamp folding, temp names)
-    (re.compile(r"\d{4}-\d{2}-\d{2}[ T]\d{2}:\d{2}:\d{2}[^\s,\]\)\}]*"), "<ts>"),
-    # python UDF worker ids / accumulator ids
-    (re.compile(r"accumulator\(\d+\)"), "accumulator(x)"),
-    # session-global LAMBDA variable counters: higher-order-function
-    # plans name their lambda vars "lambda x_19#x" from a counter that
-    # advances with every HOF planned in the SESSION, so the same
-    # query fingerprints differently after other queries ran (found
-    # r11: bench-context vs fresh-probe mismatch on every HOF query).
-    (re.compile(r"lambda ([A-Za-z]+)_\d+"), r"lambda \1_n"),
-    # residual METADATA TRUNCATION: Spark cuts metadata strings
-    # (DataFilters, Location, ...) at spark.sql.maxMetadataStringLength
-    # chars with "...", so any upstream digit-width change (exprIds,
-    # lambda counters) SHIFTS the cut point and leaves a different
-    # partial token behind (found r11: the last cross-context
-    # mismatch class). plan_text() raises the limit to make truncation
-    # rare; this collapses whatever still truncates.
-    (re.compile(r"\S*\.\.\."), "<trunc>"),
-    (re.compile(r"RoundRobinPartitioning\(\d+\)"),
-     "RoundRobinPartitioning(n)"),
-    # coalesce/repartition hints carry the partitions knob
-    (re.compile(r"(?i)(REPARTITION(?:_BY_RANGE|_BY_COL)?)\(\d+"),
-     r"\1(n"),
-]
-
-# partition COUNTS (the spark.sql.shuffle.partitions knob): the
-# trailing numPartitions in partitioning expressions — e.g.
-# "hashpartitioning(k#x, 32)", "rangepartitioning(k#x ASC, 8)" — is
-# session configuration, not plan identity; without this,
-# fingerprints taken at CPUS=8 vs 32 never match (found r11). The
-# arguments may contain NESTED parens
-# ("hashpartitioning(knownfloatingpointnormalized(normalizenanandzero
-# (x#x)), k#x, 8)"), so a [^)]* arg matcher under-reaches — the
-# greedy .* grabs the LAST ", N)" on the line (the numPartitions
-# slot), applied to fixpoint for multiple partitionings per line
-# (PartitioningCollection).
-_PARTNUM = re.compile(r"(?i)((?:hash|range)partitioning\(.*), \d+\)")
-
-
-# Distinct-aggregate group order (found r15 — the agg_distinct
-# same-HEAD "plan-change"): Catalyst's RewriteDistinctAggregates
-# collects the distinct-argument groups into hash-keyed collections,
-# so the ORDER of the groups — which column lands in which Expand
-# slot, which gid literal each FILTER carries, the grouping-key order
-# of the distinct pre-aggregate — follows the hash codes of
-# expressions, which follow the session-global exprId counter. Two
-# sessions with different planning histories produce SEMANTICALLY
-# IDENTICAL plans whose text differs only in that order (verified by
-# diffing the two captured variants; the bimodal fingerprint flapped
-# across committed BENCH_full.json history for four rounds). Identity
-# must not depend on it: gid literals normalize to `n` and every
-# set-semantic bracket list (grouping keys, aggregate function lists,
-# node outputs, hashpartitioning args, Expand projections) is sorted.
-# Deliberate trade: a real code change that merely reorders grouping
-# keys or output columns now fingerprints identically — fine for a
-# PERF-attribution artifact (column order is verified by the
-# correctness gate's schema compare, not here).
-_GID = re.compile(r"\(gid#x = \d+\)")
-_SET_LIST_MARKERS = ("keys=[", "functions=[", "output=[")
-_HASHPART = "hashpartitioning("
-_EXPAND = "Expand "
-
-
-def _split_top(s: str) -> list[str]:
-    """Split on ', ' at bracket/paren depth 0."""
-    items, depth, start = [], 0, 0
-    i = 0
-    while i < len(s):
-        ch = s[i]
-        if ch in "[(":
-            depth += 1
-        elif ch in "])":
-            depth -= 1
-        elif depth == 0 and s.startswith(", ", i):
-            items.append(s[start:i])
-            start = i + 2
-            i += 2
-            continue
-        i += 1
-    items.append(s[start:])
-    return items
-
-
-def _region_end(s: str, start: int, open_ch: str, close_ch: str) -> int:
-    depth = 0
-    for i in range(start, len(s)):
-        if s[i] == open_ch:
-            depth += 1
-        elif s[i] == close_ch:
-            depth -= 1
-            if depth == 0:
-                return i
-    return -1
-
-
-def _sorted_bracket(s: str) -> str:
-    """Sort a '[...]' list's top-level items, nested lists first.
-    Bare integer items (Expand's gid / grouping-id literals — the
-    group-order-dependent labels themselves) normalize to ``n``."""
-    items = _split_top(s[1:-1])
-    items = [
-        _sorted_bracket(it)
-        if it.startswith("[") and it.endswith("]")
-        else ("n" if it.isdigit() else it)
-        for it in items
-    ]
-    return "[" + ", ".join(sorted(items)) + "]"
-
-
-def _sort_set_lists(line: str) -> str:
-    for marker in _SET_LIST_MARKERS:
-        pos = 0
-        while True:
-            pos = line.find(marker, pos)
-            if pos < 0:
-                break
-            b = pos + len(marker) - 1  # the '['
-            e = _region_end(line, b, "[", "]")
-            if e < 0:
-                break
-            line = line[:b] + _sorted_bracket(line[b : e + 1]) + line[e + 1 :]
-            pos = b + 1
-    pos = 0
-    while True:
-        pos = line.find(_HASHPART, pos)
-        if pos < 0:
-            break
-        b = pos + len(_HASHPART) - 1  # the '('
-        e = _region_end(line, b, "(", ")")
-        if e < 0:
-            break
-        inner = ", ".join(sorted(_split_top(line[b + 1 : e])))
-        line = line[: b + 1] + inner + line[e:]
-        pos = b + 1
-    # Expand nodes: both the nested projection list AND the trailing
-    # output list are group-order-dependent; sort every top-level
-    # bracket region after "Expand ". (Sorting preserves length, so
-    # the scan index stays valid.)
-    pos = line.find(_EXPAND)
-    if pos >= 0:
-        i = pos + len(_EXPAND)
-        while i < len(line):
-            if line[i] == "[":
-                e = _region_end(line, i, "[", "]")
-                if e < 0:
-                    break
-                line = line[:i] + _sorted_bracket(line[i : e + 1]) + line[e + 1 :]
-                i = e + 1
-            else:
-                i += 1
-    return line
-
-
-def normalize(plan_text: str) -> str:
-    """Strip every run-varying token from a physical-plan string."""
-    out = plan_text
-    for pat, repl in _SUBS:
-        out = pat.sub(repl, out)
-    while True:
-        new = _PARTNUM.sub(r"\1, n)", out)
-        if new == out:
-            break
-        out = new
-    out = _GID.sub("(gid#x = n)", out)
-    return "\n".join(_sort_set_lists(ln) for ln in out.splitlines())
-
-
-def fingerprint_text(plan_text: str) -> str:
-    """12-hex-char stable hash of a normalized plan string."""
-    return hashlib.sha256(normalize(plan_text).encode()).hexdigest()[:12]
 
 
 def plan_text(df) -> str:
@@ -239,10 +12,8 @@ def plan_text(df) -> str:
     before any runtime re-plan. Planning runs; execution does not.
 
     Rendered with ``spark.sql.maxMetadataStringLength`` raised (and
-    restored): the default 100-char cut point moves with upstream
-    digit widths (exprIds, lambda counters), which would leave an
-    unstable partial token behind — see the ``<trunc>`` rule in
-    ``_SUBS`` for whatever still exceeds the raised limit.
+    restored) so long metadata strings (DataFilters, Location, ...)
+    are not cut short with ``...``.
     """
     conf = df.sparkSession.conf
     key = "spark.sql.maxMetadataStringLength"
@@ -252,8 +23,3 @@ def plan_text(df) -> str:
         return df._jdf.queryExecution().executedPlan().toString()
     finally:
         conf.set(key, old)
-
-
-def fingerprint(df) -> str:
-    """Normalized-plan fingerprint of a DataFrame (12 hex chars)."""
-    return fingerprint_text(plan_text(df))

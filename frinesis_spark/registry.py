@@ -36,10 +36,10 @@ def _load_modules():
         # protocol needs google.protobuf, absent from this container
         # for eight straight rounds (r9 final disposition: filesystem
         # search found no wheel or package to vendor, and installing
-        # is out of scope) — the implementation is retired to
-        # tests/fixtures/tws_user_profile.py; stream_user_profile
-        # (streaming/stateful.py) carries the semantics in the
-        # contract
+        # is out of scope) — the retired implementation is in git
+        # history (git log -- tests/fixtures/tws_user_profile.py);
+        # stream_user_profile (streaming/stateful.py) carries the
+        # semantics in the contract
         "frinesis_spark.sinks.kinesis_query",
         "frinesis_spark.sources.kinesis_query",
         "frinesis_spark.sources.files",

@@ -94,8 +94,9 @@ def q_stream_custom_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Per-user activity profile — the transformWithState semantics
-# (tests/fixtures/tws_user_profile.py) re-expressed on
+# Per-user activity profile — the transformWithState semantics (the
+# retired implementation is in git history:
+# git log -- tests/fixtures/tws_user_profile.py) re-expressed on
 # applyInPandasWithState, so the query is driver-verifiable even
 # where the TWS protobuf worker protocol is unavailable (this
 # container, eight straight rounds — final disposition r9: the TWS
@@ -203,8 +204,8 @@ ORACLE = {
         GROUP BY user_id
     """,
     # Bounded one-batch replay emits one row per user == batch GROUP BY
-    # (same oracle as the retired TWS variant it mirrors,
-    # tests/fixtures/tws_user_profile.py).
+    # (same oracle as the retired TWS variant it mirrors; see
+    # git log -- tests/fixtures/tws_user_profile.py).
     "stream_user_profile": """
         SELECT user_id,
                COUNT(*) AS n_events,

@@ -1,5 +1,5 @@
-"""Round-11 fixes: plan-fingerprint attribution infrastructure
-(VERDICT r10 item 1) and the round's ADVICE items."""
+"""Round-11 fixes: the committed plan-fingerprint attribution
+artifact (VERDICT r10 item 1) and the round's ADVICE items."""
 
 from __future__ import annotations
 
@@ -7,56 +7,8 @@ import os
 
 import pytest
 
-from frinesis_spark import planfp
-
 
 class TestPlanFingerprint:
-    def test_normalize_strips_expr_ids(self):
-        a = planfp.normalize("Project [l_orderkey#123L, l_qty#45]")
-        b = planfp.normalize("Project [l_orderkey#9876L, l_qty#2]")
-        assert a == b == "Project [l_orderkey#x, l_qty#x]"
-
-    def test_normalize_strips_paths_and_plan_ids(self):
-        a = planfp.normalize(
-            "Scan parquet [x#1] Location: InMemoryFileIndex(1 paths)"
-            "[file:/tmp/spark-abc123/out.parquet], plan_id=77 [id=#12]"
-        )
-        b = planfp.normalize(
-            "Scan parquet [x#9] Location: InMemoryFileIndex(1 paths)"
-            "[file:/tmp/spark-zzz999/other.parquet], plan_id=3 [id=#99]"
-        )
-        assert a == b
-
-    def test_normalize_strips_addresses_and_stats(self):
-        a = planfp.normalize(
-            "BatchEvalPython [f(x#1)@1a2b3c4d5e], Statistics(sizeInBytes=1.2 KiB)"
-        )
-        b = planfp.normalize(
-            "BatchEvalPython [f(x#2)@ffeeddccbb], Statistics(sizeInBytes=9.9 MiB)"
-        )
-        assert a == b
-
-    def test_distinct_plans_get_distinct_fingerprints(self):
-        assert planfp.fingerprint_text(
-            "HashAggregate(keys=[a#1], functions=[sum(b#2)])"
-        ) != planfp.fingerprint_text(
-            "HashAggregate(keys=[a#1], functions=[count(b#2)])"
-        )
-
-    def test_fingerprint_is_stable_for_a_real_query(self, spark, sf_dir):
-        """Two independent constructions of the same query in one
-        session get fresh exprIds from the global counter; the
-        fingerprint must absorb that (the cross-SESSION variant is
-        exercised by the r11 attribution run: identical fp across
-        separate probe processes)."""
-        from frinesis_spark import registry
-
-        q = registry.queries()["agg_group_sum"]
-        f1 = planfp.fingerprint(q(spark, sf_dir))
-        f2 = planfp.fingerprint(q(spark, sf_dir))
-        assert f1 == f2
-        assert len(f1) == 12 and int(f1, 16) >= 0
-
     def test_attribution_artifact_complete(self):
         """BENCH_attribution_r11.json must cover every query the r10
         driver flagged, each resolved with plan-identity evidence."""
@@ -326,31 +278,6 @@ class TestStubCallLatency:
             put_s = _t.perf_counter() - t0
             assert put_s >= 0.2
 
-    def test_normalize_is_idempotent(self):
-        from frinesis_spark import planfp
-
-        s = ("Scan parquet [a#12L] file:/tmp/x plan_id=9 [id=#3] "
-             "@deadbeef99 Statistics(sizeInBytes=8.0 B) 2026-08-15 12:00:00")
-        once = planfp.normalize(s)
-        assert planfp.normalize(once) == once
-
-    def test_normalize_is_partition_count_invariant(self):
-        """Fingerprints must be comparable across session configs
-        (found r11: the bench runs CPUS=32, the probe CPUS=8, and the
-        trailing numPartitions in every Exchange made all fingerprints
-        mismatch). The knob is configuration, not plan identity."""
-        from frinesis_spark import planfp
-
-        pairs = [
-            ("Exchange hashpartitioning(k#1L, 32), ENSURE_REQUIREMENTS",
-             "Exchange hashpartitioning(k#9L, 8), ENSURE_REQUIREMENTS"),
-            ("Exchange rangepartitioning(ts#2 ASC NULLS FIRST, 16)",
-             "Exchange rangepartitioning(ts#7 ASC NULLS FIRST, 200)"),
-            ("Exchange RoundRobinPartitioning(32), REPARTITION_BY_NUM",
-             "Exchange RoundRobinPartitioning(8), REPARTITION_BY_NUM"),
-        ]
-        for a, b in pairs:
-            assert planfp.normalize(a) == planfp.normalize(b), (a, b)
 
 
 class TestStubAfterSequenceLeadingZeros:

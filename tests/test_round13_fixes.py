@@ -352,85 +352,6 @@ class TestNullTsStaging:
             _stage_events_dedup_replay(spark, str(out))
 
 
-class TestBenchSelfAttribution:
-    """Verdict item 4: BENCH_full.json self-attributes >1.25x movers
-    and stamps the run with a load-quality verdict — schema pinned
-    here so the artifact contract can't silently drift."""
-
-    def test_load_quality_schema_and_verdicts(self):
-        import bench
-
-        q = bench.load_quality(0.1)
-        assert set(q) == {"load1_start", "quiet_start_bar", "verdict", "note"}
-        assert q["verdict"] == "quiet-start"
-        assert bench.load_quality(3.7)["verdict"] == "loaded-start"
-        assert bench.load_quality(-1.0)["verdict"] == "unknown"
-
-    def test_attribute_movers_verdicts(self):
-        import bench
-
-        vs_prev = {
-            "q_plan": 1.40,   # fingerprint changed, undeclared
-            "q_declared": 1.40,  # fingerprint changed, DECLARED (r15)
-            "q_load": 1.50,   # fp identical, load moved 0.2 -> 6.1
-            "q_mystery": 1.35,  # fp identical, load comparable, both quiet
-            "q_loadedboth": 1.45,  # fp identical, BOTH rounds loaded, small delta
-            "q_oneside": 1.45,  # fp identical, ONE round loaded, delta < 2.0
-            "q_old": 1.60,    # anchor predates fingerprints
-            "q_small": 3.00,  # sub-noise-floor: excluded
-            "q_flat": 1.05,   # not a mover: excluded
-            "q_faster": 0.60,  # speedup mover: annotated too
-        }
-        timings = {n: 1.0 for n in vs_prev}
-        timings["q_small"] = 0.05
-        prev = {n: 1.0 for n in vs_prev}
-        prev["q_small"] = 0.02
-        plan_fp = {n: "fpA" for n in vs_prev}
-        prev_fp = {n: "fpA" for n in vs_prev if n != "q_old"}
-        prev_fp["q_plan"] = "fpB"
-        prev_fp["q_declared"] = "fpB"
-        loads = {n: [0.1, 0.2, 0.1] for n in vs_prev}
-        loads["q_load"] = [6.0, 6.3, 6.0]
-        loads["q_loadedboth"] = [4.9, 5.1, 5.0]
-        loads["q_oneside"] = [1.9, 1.8, 2.0]  # delta 1.8 < 2.0, one side
-        prev_loads = {n: [0.1, 0.1, 0.2] for n in vs_prev}
-        prev_loads["q_loadedboth"] = [3.5, 3.6, 3.4]  # delta 1.5 < 2.0
-        spreads = {n: 1.1 for n in vs_prev}
-
-        bench._EXPECTED_PLAN_CHANGES["q_declared"] = "test: declared shift"
-        try:
-            out = bench.attribute_movers(
-                vs_prev, timings, prev, plan_fp, prev_fp, loads, prev_loads,
-                spreads,
-            )
-        finally:
-            del bench._EXPECTED_PLAN_CHANGES["q_declared"]
-        assert set(out) == {
-            "q_plan", "q_declared", "q_load", "q_loadedboth", "q_oneside",
-            "q_mystery", "q_old", "q_faster",
-        }
-        assert out["q_plan"]["verdict"] == "plan-change"
-        assert out["q_plan"]["plan_fp_identical"] is False
-        assert out["q_plan"]["declared"] is None
-        assert out["q_declared"]["verdict"] == "plan-change-expected"
-        assert out["q_declared"]["declared"] == "test: declared shift"
-        assert out["q_load"]["verdict"] == "load-shift"
-        assert out["q_loadedboth"]["verdict"] == "loaded-both"
-        # r14 ADVICE: one loaded side must NOT read "unexplained"
-        # (whose definition is both-quiet-comparable-load)
-        assert out["q_oneside"]["verdict"] == "one-side-loaded"
-        assert out["q_mystery"]["verdict"] == "unexplained"
-        assert out["q_old"]["verdict"] == "no-prev-fingerprint"
-        assert out["q_old"]["plan_fp_identical"] is None
-        assert out["q_faster"]["verdict"] == "unexplained"
-        for row in out.values():
-            assert set(row) == {
-                "ratio", "declared", "plan_fp_identical", "load1_at_reps",
-                "prev_load1_at_reps", "mean_load1", "prev_mean_load1",
-                "rep_spread", "verdict",
-            }
-
-
 class TestPngPalette:
     """Color type 3 (the last 8-bit layout): PLTE round-trip, index
     expansion to RGB on decode, loud failures on the shapes that

@@ -261,62 +261,6 @@ class TestOrAmplifiedPairPass:
         assert row["recall_floor_met"] is True
 
 
-class TestDistinctAggFingerprint:
-    """r14 verdict item 4: the agg_distinct fingerprint flapped
-    bimodally across same-HEAD bench runs for four rounds. Root cause:
-    Catalyst's RewriteDistinctAggregates orders the distinct-argument
-    groups by expression hash, which follows the session-global exprId
-    counter — two sessions with different planning histories emit
-    semantically identical plans whose Expand slots / gid literals /
-    grouping-key order are swapped. planfp v2 sorts set-semantic lists
-    and normalizes gid literals, so both captured variants hash equal.
-    """
-
-    FIXDIR = __file__.rsplit("/", 1)[0] + "/fixtures/planfp"
-
-    def test_both_captured_variants_normalize_equal(self):
-        from frinesis_spark import planfp
-
-        a = open(self.FIXDIR + "/agg_distinct_variant_a.txt").read()
-        b = open(self.FIXDIR + "/agg_distinct_variant_b.txt").read()
-        assert a != b  # the raw capture really is the bimodal pair
-        assert planfp.normalize(a) == planfp.normalize(b)
-        assert planfp.fingerprint_text(a) == planfp.fingerprint_text(b)
-
-    def test_fingerprint_stable_across_session_history(self, spark, sf_dir):
-        """The live trigger: advancing the session's exprId counter
-        between plannings (what the bench's query sequence does) must
-        not move the fingerprint."""
-        from frinesis_spark import planfp, registry
-
-        queries = registry.queries()
-        q = queries["agg_distinct"]
-        fp0 = planfp.fingerprint(q(spark, sf_dir))
-        filler = [
-            "agg_group_sum", "window_rank_topk", "join_multiway_star",
-            "agg_approx_distinct", "scalar_array_map_json",
-        ]
-        for name in filler:
-            # plan-only: building the DataFrame allocates exprIds
-            queries[name](spark, sf_dir).schema
-            assert planfp.fingerprint(q(spark, sf_dir)) == fp0
-
-    def test_fp_norm_upgrade_voids_cross_version_compare(self):
-        import bench
-
-        vs_prev = {"q_any": 1.5}
-        timings = {"q_any": 1.0}
-        prev = {"q_any": 1.0}
-        out = bench.attribute_movers(
-            vs_prev, timings, prev,
-            {"q_any": "fpNEW"}, {"q_any": "fpOLD"},
-            {"q_any": [0.1]}, {"q_any": [0.1]}, {"q_any": 1.0},
-            prev_norm_version=1,
-        )
-        assert out["q_any"]["verdict"] == "fp-norm-upgraded"
-        assert out["q_any"]["plan_fp_identical"] is None
-
-
 class TestRoundRobinPartitionKeys:
     """r15 stretch (r14 verdict item 8): deterministic per-topic
     round-robin fallback keys beside the reference's UUID-per-record

@@ -82,10 +82,36 @@ def test_split_stage_int96_guard(tmp_path, monkeypatch):
     """An INT96-timestamp table must NOT stage: pyarrow's v2.6 writer
     would turn INT96 into TIMESTAMP(NANOS), flipping the events read
     onto the legacy nanos branch (ADVICE r15)."""
+    path = tmp_path / "events.parquet"
+    _write_events(path, int96=True)
+    sch = pq.ParquetFile(path).schema
+    assert sch.column(sch.names.index("ts")).physical_type == "INT96"
+    assert path.stat().st_size >= catalog._SPLIT_MIN_BYTES
+    monkeypatch.setenv("SPARK_GRAFT_SPLIT_STAGE", "1")
+    got = catalog._split_staged_path(str(tmp_path), "events")
+    assert got == str(path), "INT96 relayout must be discarded"
+
+
+def test_split_stage_int96_guard_checks_every_file(tmp_path, monkeypatch):
+    """A two-file table whose SECOND file alone carries an INT96 ts
+    must not stage either: the guard compares every original file with
+    its relayout, not just the first."""
+    table_dir = tmp_path / "events.parquet"
+    table_dir.mkdir()
+    _write_events(table_dir / "part-0.parquet", int96=False)
+    _write_events(table_dir / "part-1.parquet", int96=True)
+    monkeypatch.setenv("SPARK_GRAFT_SPLIT_STAGE", "1")
+    got = catalog._split_staged_path(str(tmp_path), "events")
+    assert got == str(table_dir), "INT96 relayout must be discarded"
+
+
+def _write_events(path, int96: bool, n: int = 70_000) -> None:
+    """One single-row-group events file with a µs ``ts`` (INT96 when
+    asked), padded so the file alone reaches _SPLIT_MIN_BYTES."""
     import datetime as dt
 
-    n = 70_000
     base = dt.datetime(2024, 1, 1)
+    pad = b"x" * -(-catalog._SPLIT_MIN_BYTES // n)
     tbl = pa.table(
         {
             "event_id": pa.array(range(n), pa.int64()),
@@ -93,21 +119,14 @@ def test_split_stage_int96_guard(tmp_path, monkeypatch):
                 [base + dt.timedelta(seconds=i) for i in range(n)],
                 pa.timestamp("us"),
             ),
+            "pad": pa.array([pad] * n, pa.binary()),
         }
     )
-    path = tmp_path / "events.parquet"
     pq.write_table(
         tbl,
         path,
         row_group_size=n,
         compression="none",
         use_dictionary=False,
-        use_deprecated_int96_timestamps=True,
+        use_deprecated_int96_timestamps=int96,
     )
-    sch = pq.ParquetFile(path).schema
-    assert sch.column(sch.names.index("ts")).physical_type == "INT96"
-    if path.stat().st_size < catalog._SPLIT_MIN_BYTES:
-        pytest.skip("fixture too small to trigger staging")
-    monkeypatch.setenv("SPARK_GRAFT_SPLIT_STAGE", "1")
-    got = catalog._split_staged_path(str(tmp_path), "events")
-    assert got == str(path), "INT96 relayout must be discarded"

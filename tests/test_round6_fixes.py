@@ -192,70 +192,38 @@ def test_clear_derived_caches_resets_and_rebuilds(spark, sf_dir):
 
 def test_bench_compact_line_fits_driver_capture():
     """BENCH_r05 was lost because the bench stdout line outgrew the
-    driver's 2000-char tail capture. Pin the compact line under it for
-    the WORST plausible case: every headline query present with
-    4-digit-seconds times and every one flagged as a regression."""
-    import bench
-
-    timings = {n: 9999.99 for n in bench.HEADLINE}
-    regressions = {n: 99.99 for n in bench.HEADLINE}
-    line = bench.compact_line(timings, regressions, 0.1, 999999.999)
-    assert len(line) < 1900  # driver captures the last 2000 chars
-    # The regression alarm must survive truncation (r6 review fix:
-    # queries are dropped first, regressions only capped at 20).
-    import json as _json
-
-    worst = _json.loads(line)
-    assert len(worst.get("regressions", {})) >= min(20, len(regressions))
-    # Normal case: the budget keeps the line under the capture while
-    # retaining nearly the whole per-query map — and anything dropped
-    # is annotated (r8: 71 headline entries no longer fit whole; the
-    # dropped tail is the FASTEST queries, which sit under the
-    # regression alarm's noise floor anyway).
+    driver's 2000-char tail capture. The compact line carries a FIXED
+    name set: at the worst-case width (every number at its widest) it
+    stays within 1800 chars, and any two timing maps produce the same
+    ``queries`` keys, so no name drops from or appears in the driver's
+    round-over-round comparison."""
     import json
 
-    normal = json.loads(
-        bench.compact_line({n: 1.23 for n in bench.HEADLINE}, {}, 0.1, 46.74)
-    )
-    kept = set(normal["queries"])
-    # The compact line keeps as many queries as the budget allows
-    # (≥55 is capacity sanity, not a hard contract — the headline set
-    # grows). Dropped queries no longer lose their regression anchor:
-    # _load_prev_bench backfills them from the committed
-    # BENCH_full.json (r9 review wave 5), which carries every query.
-    assert len(kept) >= 55
-    dropped = set(bench.HEADLINE) - kept
-    assert normal.get("queries_truncated", 0) == len(dropped)
-    assert len(json.dumps(normal, separators=(",", ":"))) < 1800
-
-
-def test_prev_bench_anchor_backfills_from_full_record(tmp_path):
-    """A query missing from the compact BENCH_r{N}.json (budget-dropped
-    tail) must still get its anchor from the committed full record —
-    the driver-recorded times win where both exist."""
-    import json as _json
-
     import bench
 
-    (tmp_path / "BENCH_r07.json").write_text(
-        _json.dumps(
-            {"parsed": {"sf": 0.1, "queries": {"q_a": 1.0, "q_b": 2.0}}}
-        )
-    )
-    (tmp_path / "BENCH_full.json").write_text(
-        _json.dumps(
-            {"sf": 0.1, "queries": {"q_b": 9.0, "q_dropped": 0.4}}
-        )
-    )
-    rnd, prev = bench._load_prev_bench(tmp_path, 0.1)
-    assert rnd == 7
-    assert prev == {"q_a": 1.0, "q_b": 2.0, "q_dropped": 0.4}
-    # Wrong-sf full record contributes nothing.
-    (tmp_path / "BENCH_full.json").write_text(
-        _json.dumps({"sf": 0.01, "queries": {"q_x": 1.0}})
-    )
-    _, prev = bench._load_prev_bench(tmp_path, 0.1)
-    assert prev == {"q_a": 1.0, "q_b": 2.0}
+    worst = bench._worst_case_line(bench.COMPACT_QUERIES)
+    assert len(worst) <= bench.COMPACT_MAX_CHARS
+    # the longest prefix: one more name would not fit
+    nxt = bench.HEADLINE[: len(bench.COMPACT_QUERIES) + 1]
+    assert len(bench._worst_case_line(nxt)) > bench.COMPACT_MAX_CHARS
+    assert bench.COMPACT_QUERIES == bench.HEADLINE[: len(nxt) - 1]
+
+    def line(timings):
+        return json.loads(bench.compact_line(
+            {n: timings[n] for n in bench.COMPACT_QUERIES},
+            round(sum(timings.values()), 3), 12.3, 0.1, sink_rps=54321,
+        ))
+
+    fast = line({n: 0.01 for n in bench.HEADLINE})
+    slow = line({n: 10.0 + i for i, n in enumerate(bench.HEADLINE)})
+    assert set(fast["queries"]) == set(slow["queries"])
+    assert set(fast["queries"]) == set(bench.COMPACT_QUERIES)
+    assert set(fast) == {
+        "metric", "value", "unit", "queries", "tpch_total", "sf", "full",
+        "sink_rps",
+    }
+    # value still sums over every headline query, not the compact subset
+    assert fast["value"] == round(0.01 * len(bench.HEADLINE), 3)
 
 
 def _swap_documents(spark, monkeypatch, module, docs):

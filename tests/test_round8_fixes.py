@@ -482,20 +482,6 @@ def test_bucketed_store_raises_on_corrupt_manifest(spark, tmp_path):
         _BucketedSnapshotStore(base, "user_id", order, n_buckets=2)
 
 
-def test_expected_shifts_self_expire():
-    """An _EXPECTED_SHIFTS entry declared against r7 must stop
-    suppressing once the comparison anchor is r8+ (the shift is baked
-    into the anchor by then) — a stale entry can't mask a real
-    regression forever."""
-    import bench
-
-    entry = bench._EXPECTED_SHIFTS["similarity_ann_lsh"]
-    assert entry[0] == 7
-    # the suppression predicate, as main() applies it:
-    assert 7 <= entry[0]  # anchor r7 → suppressed
-    assert not (8 <= entry[0])  # anchor r8 → alarm live again
-
-
 def test_ab_test_fractional_constant_variants(spark, monkeypatch):
     """Constant FRACTIONAL-money variants compute Σv² − (Σv)²/n to a
     tiny negative double; unclamped, sqrt of it is NaN on Spark and an
