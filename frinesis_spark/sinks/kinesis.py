@@ -8,8 +8,11 @@ with size+time batching, retry, backoff, shedding and a drain deadline
 
 Spark mapping (SURVEY.md §1.3, §3.4):
 
-- the hand-rolled run loop / goroutines (A13) → Structured Streaming's
-  micro-batch loop + executor parallelism;
+- the hand-rolled run loop (A13) → Structured Streaming's micro-batch
+  loop + executor parallelism;
+- one goroutine per topic (sink.go:26, :96-100) → one flush thread per
+  topic inside each task (:func:`deliver_partition`), so the topics'
+  ``PutRecords`` round-trips overlap;
 - time-triggered flush (A5) → ``trigger(processingTime=...)``;
 - everything PutRecords-specific (A4, A6–A11) lives in
   :class:`BatchProducer` below — plain Python running inside
@@ -32,7 +35,11 @@ import os
 import time
 import uuid
 from collections.abc import Callable, Iterable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from itertools import chain
+
+from pyspark.sql import Row
 
 # Task-local logger mirroring the reference's zap logger surface
 # (batchproducer.go logs alongside the Events channel; its observed-
@@ -54,6 +61,11 @@ MAX_KINESIS_BATCH_SIZE = 500
 # data-loss logging as the max-attempts drop path.
 MAX_RECORD_BYTES = 1_048_576
 MAX_REQUEST_BYTES = 5 * 1_048_576
+
+# Most topic producers one task flushes at once. botocore's default
+# connection pool holds 10 connections (``max_pool_connections``), so
+# more threads on the task's one client would only queue for a socket.
+MAX_FLUSH_THREADS = 10
 
 
 class BufferFullError(RuntimeError):
@@ -160,8 +172,9 @@ def make_boto3_client_factory(env: dict | None = None) -> Callable[[], object]:
     ``AWS_REGION_NAME`` is required (utils.go:24-26); an optional
     ``KINESIS_ENDPOINT`` (localstack) gets ``http://`` defaulting and
     dummy credentials (utils.go:33-37, :57-73). Returned as a factory
-    so each executor task builds its own client lazily (A2's
-    one-producer-per-topic becomes one-client-per-task).
+    so each executor task builds its own client lazily; the task's
+    topic producers share it from their flush threads (boto3 clients
+    are thread-safe).
     """
     e = dict(os.environ if env is None else env)
 
@@ -532,17 +545,103 @@ def _payload_bytes(data) -> bytes:
     )
 
 
+def deliver_partition(
+    rows: Iterable,
+    client_factory: Callable[[], object],
+    config: KinesisSinkConfig,
+    topic_col: str,
+    data_col: str,
+    partition_key_col: str | None,
+    default_topic: str | None = None,
+) -> list[tuple[str, BatchProducer, int]]:
+    """One task's delivery loop, shared by both Spark writers.
+
+    Every row is buffered into one :class:`BatchProducer` per topic
+    (A1/A2, created on first use; sink.go:79-104's double-checked
+    registry collapses to a dict filled by this one thread). Then all
+    producers flush at once, one thread per topic — the reference's
+    goroutine per topic (sink.go:26, :96-100) — at most
+    ``MAX_FLUSH_THREADS`` at a time, all on the task's one client. Each
+    producer keeps its own retry, backoff and shedding; one drain
+    deadline, taken when the flush starts, bounds them all.
+
+    A row's topic is its ``topic_col`` value, or ``default_topic`` when
+    that is null or the column is absent. Returns ``(topic, producer,
+    records remaining)`` per topic, in first-seen order.
+    """
+    rows = iter(rows)
+    first = next(rows, None)
+    if first is None:
+        # An empty partition builds no client and imports no boto3.
+        return []
+    # Column positions, resolved once per partition (Row[name] searches
+    # the field list on every access). A missing partition_key_col
+    # falls back to A16 key generation instead of failing (r9 review
+    # wave 8); a missing topic column needs a default topic.
+    fields = list(first.__fields__)
+    topic_i, pk_i = (
+        fields.index(c) if c in fields else None
+        for c in (topic_col, partition_key_col)
+    )
+    data_i = fields.index(data_col)
+    if topic_i is None and default_topic is None:
+        raise ValueError(f"rows have no {topic_col!r} column")
+    client = client_factory()  # A2: one per task, on its first row
+    producers: dict[str, BatchProducer] = {}
+    for row in chain((first,), rows):
+        topic = row[topic_i] if topic_i is not None else None
+        topic = topic or default_topic
+        prod = producers.get(topic)
+        if prod is None:
+            prod = producers[topic] = BatchProducer(client, topic, config)
+        pk = row[pk_i] if pk_i is not None else None
+        prod.add(_payload_bytes(row[data_i]), pk)  # A3 (+A16 inside add)
+
+    deadline = (
+        time.monotonic() + config.flush_timeout_s
+        if config.flush_timeout_s
+        else None
+    )
+
+    def drain(prod: BatchProducer) -> int:
+        left = None
+        if deadline is not None:
+            # A producer that waited for a thread past the deadline gets
+            # a negative budget and returns at once; only exactly 0
+            # would mean "no deadline".
+            left = deadline - time.monotonic() or -1.0
+        return prod.flush(timeout_s=left, send_stats=True)[1]
+
+    with ThreadPoolExecutor(
+        min(len(producers), MAX_FLUSH_THREADS),
+        thread_name_prefix="kinesis-flush",
+    ) as pool:
+        remaining = list(pool.map(drain, producers.values()))  # A11
+    return [
+        (topic, prod, left)
+        for (topic, prod), left in zip(producers.items(), remaining)
+    ]
+
+
+#: One per-topic stats row per task, in ``STATS_SCHEMA`` order.
+_TopicStats = Row(
+    "topic", "n_sent", "n_dropped", "n_shed", "n_retries", "n_put_calls",
+    "n_remaining",
+)
+
+
 class KinesisBatchWriter:
     """foreachBatch writer: A1/A2's per-topic producer registry over a
     micro-batch DataFrame.
 
-    Each executor task (partition) lazily creates one
-    :class:`BatchProducer` per topic it sees (sink.go:79-104's
-    double-checked registry collapses to a dict — tasks are
-    single-threaded), drains it with the configured deadline, and
-    returns per-topic delivery stats as rows. Per-topic partition
-    isolation comes from ``repartition(topic)`` before the write —
-    the Spark analogue of one-goroutine-per-topic (sink.go:26).
+    The batch shuffles once on the topic column, so each topic's
+    records meet in one task and feed one :class:`BatchProducer`. Each
+    task runs :func:`deliver_partition`: it flushes its topics
+    concurrently, one thread per topic, so the task waits on the wire
+    for about one flush instead of one per topic, however many topics
+    AQE coalesced into it. Tasks return per-topic delivery stats as
+    rows. A micro-batch costs one Spark job for the delivery, after
+    the job AQE runs for the shuffle's map stage.
     """
 
     #: schema of the stats rows returned by write_batch
@@ -588,32 +687,17 @@ class KinesisBatchWriter:
         self.data_col = data_col
         self.partition_key_col = partition_key_col
 
-    def _write_partition(self, rows: Iterator) -> Iterator[tuple]:
-        client = self.client_factory()  # A2: lazy, one per task
-        producers: dict[str, BatchProducer] = {}
-        for row in rows:
-            topic = row[self.topic_col]
-            prod = producers.get(topic)
-            if prod is None:  # A1/A2: create on first use
-                prod = BatchProducer(client, topic, self.config)
-                producers[topic] = prod
-            data = row[self.data_col]
-            # Column-presence fallback (r9 review wave 8): the default
-            # partition_key_col on a frame WITHOUT that column raised
-            # per row instead of falling back to the advertised A16
-            # UUID generation (the DataSource writer's d.get path).
-            pk = None
-            if self.partition_key_col is not None and (
-                self.partition_key_col in (getattr(row, "__fields__", ()) or ())
-            ):
-                pk = row[self.partition_key_col]
-            prod.add(_payload_bytes(data), pk)  # A3 (+A16 inside add)
-        for topic, prod in producers.items():  # A11: flush every topic
-            _sent, remaining = prod.flush(
-                timeout_s=self.config.flush_timeout_s, send_stats=True
-            )
+    def _write_partition(self, rows: Iterator) -> Iterator[Row]:
+        for topic, prod, remaining in deliver_partition(
+            rows,
+            self.client_factory,
+            self.config,
+            self.topic_col,
+            self.data_col,
+            self.partition_key_col,
+        ):
             s = prod.stats
-            yield (
+            yield _TopicStats(
                 topic,
                 s.records_sent,
                 s.records_dropped,
@@ -623,28 +707,31 @@ class KinesisBatchWriter:
                 remaining,
             )
 
-    def write_batch(self, batch_df, epoch_id: int | None = None):
-        """Run one micro-batch; returns the per-topic stats DataFrame.
+    def _deliver(self, batch_df) -> list[Row]:
+        """Deliver one micro-batch; returns the collected per-topic
+        stats rows.
 
         Scale: records shuffle once on the topic key (so one task owns
         a topic's traffic, mirroring the per-topic producer) and the
-        only driver-side data is the tiny stats rows.
+        only driver-side data is the tiny stats rows. EAGER (r9 review
+        wave 8): the side effect must not ride on lazy evaluation — an
+        un-actioned return value silently sent nothing, and every
+        re-evaluation re-sent every record.
         """
-        spark = batch_df.sparkSession
         routed = batch_df.repartition(self.topic_col)
-        stats_rdd = routed.rdd.mapPartitions(self._write_partition)
-        # EAGER (r9 review wave 8): the side effect must not ride on
-        # lazy evaluation — an un-actioned return value silently sent
-        # nothing, and every re-evaluation re-sent every record. The
-        # collected stats are one tiny row per topic; the returned
-        # frame is a local relation that can be re-used freely.
-        stats_rows = stats_rdd.collect()
-        return spark.createDataFrame(stats_rows, self.STATS_SCHEMA)
+        return routed.rdd.mapPartitions(self._write_partition).collect()
+
+    def write_batch(self, batch_df, epoch_id: int | None = None):
+        """Run one micro-batch; returns the per-topic stats DataFrame,
+        a local relation that can be re-used freely."""
+        return batch_df.sparkSession.createDataFrame(
+            self._deliver(batch_df), self.STATS_SCHEMA
+        )
 
     def __call__(self, batch_df, epoch_id):
         """foreachBatch entry point (A5's time trigger is configured on
         the StreamingQuery; A11's close-with-error surfaces here)."""
-        stats = self.write_batch(batch_df, epoch_id).collect()
+        stats = self._deliver(batch_df)
         undelivered = sum(r.n_remaining for r in stats)
         if undelivered:
             # Close() errors when messages remain (sink.go:121-123);

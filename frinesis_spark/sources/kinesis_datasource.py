@@ -11,10 +11,12 @@ contract instead of helper functions:
   task drains its shard with a task-local client (the shard IS the
   parallelism unit, 1 MB/s each; read loop ≙ the reference's
   read-back loop, /root/reference/integration_test.go:112-143).
-- **batch write** — each task feeds a :class:`BatchProducer`
-  (A3–A11: ≤500-record chunks, backoff, per-record retry/drop,
-  shedding, drain deadline) and fails the task if records remain
-  after the deadline — Close-with-error semantics (sink.go:112-126).
+- **batch write** — each task runs the sink's per-task delivery loop
+  (``sinks.kinesis.deliver_partition``): one :class:`BatchProducer`
+  per stream (A3–A11: ≤500-record chunks, backoff, per-record
+  retry/drop, shedding, drain deadline), flushed concurrently, and
+  fails the task if records remain after the deadline —
+  Close-with-error semantics (sink.go:112-126).
 - **streaming read** — a :class:`SimpleDataSourceStreamReader` whose
   offsets are per-shard sequence positions; each micro-batch reads
   (start, caught-up], exactly the incremental form of the batch
@@ -128,11 +130,6 @@ class KinesisBatchReader(DataSourceReader):
         )
 
 
-class _WroteCount(WriterCommitMessage):
-    def __init__(self, n: int):
-        self.n = n
-
-
 class KinesisDataSourceWriter(DataSourceWriter):
     """Input rows need a binary ``data`` column; ``partition_key`` and
     ``stream`` columns are honored when present (per-topic routing,
@@ -156,32 +153,23 @@ class KinesisDataSourceWriter(DataSourceWriter):
         self.config = cfg
 
     def write(self, iterator):
-        from frinesis_spark.sinks.kinesis import (
-            BatchProducer,
-            _payload_bytes,
-        )
+        from frinesis_spark.sinks.kinesis import deliver_partition
 
-        client = self.factory()
-        cfg = self.config
-        producers: dict[str, BatchProducer] = {}
-        n = 0
-        for row in iterator:
-            d = row.asDict()
-            stream = d.get("stream") or self.default_stream
-            prod = producers.get(stream)
-            if prod is None:
-                prod = BatchProducer(client, stream, cfg)
-                producers[stream] = prod
-            prod.add(_payload_bytes(d["data"]), d.get("partition_key"))
-            n += 1
-        for stream, prod in producers.items():
-            _, remaining = prod.flush(cfg.flush_timeout_s)
+        for stream, _prod, remaining in deliver_partition(
+            iterator,
+            self.factory,
+            self.config,
+            topic_col="stream",
+            data_col="data",
+            partition_key_col="partition_key",
+            default_topic=self.default_stream,
+        ):
             if remaining:
                 raise RuntimeError(
                     f"{FORMAT_NAME}: {remaining} records undelivered to "
                     f"{stream!r} at drain deadline"
                 )
-        return _WroteCount(n)
+        return WriterCommitMessage()
 
     def commit(self, messages):
         return None

@@ -75,6 +75,28 @@ def test_write_routes_per_row_stream(registered, tmp_path):
         assert n == expect, topic
 
 
+def test_write_fails_task_on_undelivered_records():
+    """Close-with-error (sink.go:121-123): records still buffered at
+    the drain deadline fail the write task, naming the stream; rows
+    without a ``stream`` column go to the option stream."""
+    from pyspark.sql import Row
+
+    from frinesis_spark.sinks.mock import MockClientFactory
+    from frinesis_spark.sources.kinesis_datasource import (
+        KinesisDataSourceWriter,
+    )
+
+    writer = KinesisDataSourceWriter({"stream": "events-out"})
+    writer.factory = MockClientFactory(should_err=True)
+    writer.config.flush_timeout_s = 0.2
+    rows = [Row(data=b"x", partition_key=None) for _ in range(3)]
+    with pytest.raises(
+        RuntimeError,
+        match="3 records undelivered to 'events-out' at drain deadline",
+    ):
+        writer.write(iter(rows))
+
+
 def test_partitioned_stream_reader_incremental(registered, tmp_path):
     """The executor-side (partitioned) stream reader delivers each
     record exactly once across micro-batches."""

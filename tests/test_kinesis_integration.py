@@ -216,3 +216,34 @@ def test_restart(kin, stream):
 
     received = _read_back(kin, stream, len(expected))
     assert _multiset(received) == _multiset(expected)
+
+
+def test_writer_topic_threads_share_one_client_over_wire(spark):
+    """KinesisBatchWriter over the real wire: each task's topic threads
+    share one boto3 client. Five topics × 2k records against a stub
+    that takes 15 ms per call and throttles every 10th record; every
+    id must arrive at least once."""
+    if os.environ.get("KINESIS_ENDPOINT"):
+        pytest.skip("fault injection exists only on the in-process stub")
+    from frinesis_spark.sinks.kinesis import (
+        KinesisBatchWriter,
+        make_boto3_client_factory,
+    )
+    from tests.kinesis_stub import KinesisStub
+
+    topics = [f"wire.topic{i}" for i in range(5)]
+    with KinesisStub(fail_every_nth_record=10, call_latency_s=0.015) as stub:
+        factory = make_boto3_client_factory(
+            {"AWS_REGION_NAME": "us-east-1", "KINESIS_ENDPOINT": stub.endpoint}
+        )
+        kin = factory()
+        for t in topics:
+            kin.create_stream(StreamName=t, ShardCount=1)
+        df = spark.range(0, 10_000).selectExpr(
+            "concat('wire.topic', id % 5) AS topic",
+            "cast(cast(id as string) as binary) AS data",
+        )
+        stats = KinesisBatchWriter(factory)(df, 0)
+        assert sum(r.n_retries for r in stats) > 0  # throttles were retried
+        got = {int(x) for t in topics for x in _read_back(kin, t, 2000)}
+        assert got == set(range(10_000))

@@ -529,3 +529,141 @@ def test_payload_type_dispatch():
     assert _payload_bytes(bytearray(b"ba")) == b"ba"
     with _pytest.raises(TypeError, match="int"):
         _payload_bytes(7)
+
+
+# -- concurrent per-topic drain, one delivery job per batch ------------
+
+def _timed_client_factory(log_path, latency_s=0.0, fail=False):
+    """Factory for a client whose ``put_records`` sleeps ``latency_s``
+    and appends ``stream start end`` (wall clock) to ``log_path``, then
+    succeeds, or raises when ``fail`` is set. Defined in a function so
+    that Spark tasks get the class by value."""
+    import time
+
+    class TimedClient:
+        def put_records(self, Records, StreamName):  # noqa: N803
+            start = time.time()
+            time.sleep(latency_s)
+            with open(log_path, "a") as fh:
+                fh.write(f"{StreamName} {start} {time.time()}\n")
+            if fail:
+                raise RuntimeError("oh noes")
+            return {
+                "FailedRecordCount": 0,
+                "Records": [{"SequenceNumber": "1"} for _ in Records],
+            }
+
+    return TimedClient
+
+
+def _logged_calls(log_path):
+    """``(start, end, stream)`` of every logged call, by start time."""
+    with open(log_path) as fh:
+        calls = [line.split() for line in fh]
+    return sorted((float(a), float(b), s) for s, a, b in calls)
+
+
+def test_task_flushes_its_topics_concurrently(tmp_path):
+    """Five topics in one task: their PutRecords calls overlap, like
+    the reference's goroutine per topic (sink.go:26, :96-100), instead
+    of running one topic after another."""
+    from pyspark.sql import Row
+
+    log = str(tmp_path / "calls.log")
+    writer = KinesisBatchWriter(_timed_client_factory(log, latency_s=0.05))
+    rows = [Row(topic=f"t{i % 5}", data=b"x") for i in range(50)]
+    stats = list(writer._write_partition(iter(rows)))
+    calls = _logged_calls(log)
+    assert len(calls) == 5
+    assert any(b[0] < a[1] for a, b in zip(calls, calls[1:])), calls
+    assert sorted(r.topic for r in stats) == [f"t{i}" for i in range(5)]
+    assert sum(r.n_sent for r in stats) == 50
+
+
+def test_failing_topics_share_one_drain_deadline(spark, tmp_path):
+    """Three topics whose every call fails: the batch fails as
+    undelivered, and all three drain under one deadline — the last
+    call starts within one deadline (plus one backoff step) of the
+    first, not one deadline per topic later."""
+    log = str(tmp_path / "calls.log")
+    cfg = KinesisSinkConfig(
+        flush_timeout_s=0.3,
+        backoff_initial_s=0.05,
+        add_blocks_when_buffer_full=True,
+    )
+    writer = KinesisBatchWriter(_timed_client_factory(log, fail=True), cfg)
+    df = spark.range(0, 30).selectExpr(
+        "concat('t', id % 3) AS topic",
+        "cast(cast(id as string) as binary) AS data",
+    )
+    with pytest.raises(Exception, match="undelivered"):
+        writer(df, 0)
+    calls = _logged_calls(log)
+    assert {s for *_, s in calls} == {"t0", "t1", "t2"}
+    span = calls[-1][0] - calls[0][0]
+    assert span <= cfg.flush_timeout_s + cfg.backoff_initial_s, calls
+
+
+def test_writer_runs_one_delivery_job_per_batch(spark):
+    """A micro-batch collects its stats once. AQE runs the topic
+    shuffle's map stage as a job of its own, so the writer must run
+    exactly the jobs of one bare action over that shuffle: one job
+    besides the shuffle's."""
+    import uuid
+
+    sc = spark.sparkContext
+    df = spark.range(0, 200).selectExpr(
+        "concat('t', id % 5) AS topic",
+        "cast(cast(id as string) as binary) AS data",
+    )
+
+    def jobs(action):
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return sc.statusTracker().getJobIdsForGroup(group)
+
+    shuffle_and_action = jobs(
+        lambda: df.repartition("topic")
+        .rdd.mapPartitions(lambda rows: iter(()))
+        .collect()
+    )
+    writer = KinesisBatchWriter(MockClientFactory())
+    assert len(jobs(lambda: writer(df, 0))) == len(shuffle_and_action)
+    assert len(shuffle_and_action) <= 2
+
+
+def test_more_topics_than_flush_threads_share_one_client():
+    """More topics than flush threads (and cores) on one shared client,
+    with the interpreter switching threads every microsecond: every
+    record is sent exactly once and every topic reports its stats."""
+    import sys
+
+    from pyspark.sql import Row
+
+    from frinesis_spark.sinks.kinesis import (
+        MAX_FLUSH_THREADS,
+        deliver_partition,
+    )
+
+    client = MockKinesisClient()
+    topics = MAX_FLUSH_THREADS + 2
+    rows = [Row(topic=f"t{i % topics}", data=b"x") for i in range(700 * topics)]
+    cfg = KinesisSinkConfig(add_blocks_when_buffer_full=True)
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        results = deliver_partition(
+            rows, lambda: client, cfg, "topic", "data", None
+        )
+    finally:
+        sys.setswitchinterval(old)
+    assert sorted(t for t, *_ in results) == sorted(
+        f"t{i}" for i in range(topics)
+    )
+    assert [left for *_, left in results] == [0] * topics
+    assert sum(p.stats.records_sent for _, p, _ in results) == len(rows)
+    assert sorted(client.calls) == [200] * topics + [500] * topics
