@@ -62,6 +62,18 @@ MAX_KINESIS_BATCH_SIZE = 500
 MAX_RECORD_BYTES = 1_048_576
 MAX_REQUEST_BYTES = 5 * 1_048_576
 
+# A9 shedding, hardcoded in the reference (batchproducer.go:354-357):
+# an in-flight batch is shed after this many consecutive whole-call
+# errors while the buffer is at least this full.
+SHED_AFTER_CONSECUTIVE_ERRORS = 5
+SHED_BUFFER_RATIO = 0.95
+
+# A7 backoff (batchproducer.go:334-344): 50 ms doubling per consecutive
+# error. Capped: uncapped doubling reaches 25.6 s at 10 consecutive
+# errors and would blow straight through any drain deadline.
+BACKOFF_INITIAL_S = 0.05
+BACKOFF_MAX_S = 2.0
+
 # Most topic producers one task flushes at once. botocore's default
 # connection pool holds 10 connections (``max_pool_connections``), so
 # more threads on the task's one client would only queue for a socket.
@@ -79,57 +91,41 @@ class ConfigError(ValueError):
 
 @dataclass
 class KinesisSinkConfig:
-    """Producer configuration — field-for-field port of the reference's
-    ``batchproducer.Config`` defaults (batchproducer.go:74-121) plus the
-    sink-level flush timeout (sink.go:19, :44-47)."""
+    """Producer configuration: the reference's ``batchproducer.Config``
+    knobs with its defaults (batchproducer.go:74-121), plus the
+    sink-level flush timeout (sink.go:19, :44-47).
+
+    Where the reference's settings live in this port:
+
+    - BatchSize, BufferSize, MaxAttemptsPerRecord,
+      AddBlocksWhenBufferFull, StatInterval → the fields below, and
+      the sink's flush timeout → ``flush_timeout_s``;
+    - FlushInterval → ``stream_to_kinesis(trigger_seconds=...)``, the
+      micro-batch trigger (A5);
+    - the StatReceiver → ``BatchProducer(stat_receiver=...)``; the
+      injected logger → this module's logger;
+    - shedding and backoff, hardcoded in the reference → the module
+      constants ``SHED_*`` and ``BACKOFF_*``;
+    - the per-record UUIDv4 partition key (A16) → ``BatchProducer.add``
+      when the caller passes no key.
+    """
 
     batch_size: int = MAX_KINESIS_BATCH_SIZE
     buffer_size: int = 10_000
-    flush_interval_s: float = 1.0
     max_attempts_per_record: int = 10
     add_blocks_when_buffer_full: bool = False
     flush_timeout_s: float = 30.0
-    # A9 shedding knobs (hardcoded in the reference, batchproducer.go:354-357).
-    shed_after_consecutive_errors: int = 5
-    shed_buffer_ratio: float = 0.95
-    # A7 backoff (batchproducer.go:334-344). Capped: uncapped doubling
-    # reaches 25.6s at 10 consecutive errors and would blow straight
-    # through any drain deadline.
-    backoff_initial_s: float = 0.05
-    backoff_max_s: float = 2.0
     # A15: periodic stats emission during drains (StatInterval,
     # batchproducer.go:235-239, :458-470).
     stat_interval_s: float = 1.0
-    # r15: fallback partition-key strategy when the caller supplies no
-    # key. "uuid" is the reference's only behavior (A16 — a fresh
-    # UUIDv4 per record, sink.go:76 / utils.go:16-19), which spreads
-    # shards evenly only IN EXPECTATION. "round_robin" cycles a fixed
-    # per-topic pool of ``round_robin_width`` keys deterministically —
-    # exactly-even traffic per key, bounded key cardinality (what
-    # KPL-style per-key aggregation and per-key throughput metrics
-    # want), and replay-stable keys. Valid ONLY under the orderless
-    # delivery contract this sink already declares: records for one
-    # entity land on rotating shards, so any per-key ordering
-    # requirement must pass explicit keys instead.
-    partition_key_mode: str = "uuid"
-    round_robin_width: int = 64
 
     def validate(self) -> None:
-        if self.partition_key_mode not in ("uuid", "round_robin"):
-            raise ConfigError(
-                "partition_key_mode must be 'uuid' (A16 per-record "
-                f"UUIDv4) or 'round_robin', got {self.partition_key_mode!r}"
-            )
-        if self.round_robin_width < 1:
-            raise ConfigError("round_robin_width must be >= 1")
         if not 1 <= self.batch_size <= MAX_KINESIS_BATCH_SIZE:
             raise ConfigError(
                 f"batch_size must be in [1, {MAX_KINESIS_BATCH_SIZE}]"
             )
         if self.buffer_size < 1:
             raise ConfigError("buffer_size must be >= 1")
-        if self.flush_interval_s < 0.05:
-            raise ConfigError("flush_interval_s must be >= 50ms")
         if self.max_attempts_per_record < 1:
             raise ConfigError("max_attempts_per_record must be >= 1")
         if self.flush_timeout_s < 0:
@@ -139,14 +135,6 @@ class KinesisSinkConfig:
             )
         if self.stat_interval_s <= 0:
             raise ConfigError("stat_interval_s must be > 0")
-        if self.shed_after_consecutive_errors < 1:
-            raise ConfigError("shed_after_consecutive_errors must be >= 1")
-        if not 0 < self.shed_buffer_ratio <= 1:
-            raise ConfigError("shed_buffer_ratio must be in (0, 1]")
-        if self.backoff_initial_s <= 0:
-            raise ConfigError("backoff_initial_s must be > 0")
-        if self.backoff_max_s < self.backoff_initial_s:
-            raise ConfigError("backoff_max_s must be >= backoff_initial_s")
 
     @classmethod
     def from_env(cls, env: dict | None = None) -> "KinesisSinkConfig":
@@ -262,22 +250,11 @@ class BatchProducer:
         self.stats = ProducerStats()
         # A15 ticker: last periodic stats emission (clock units).
         self._last_stat_emit = self.clock()
-        # r15 round-robin key fallback: per-producer (= per-topic)
-        # cycle position; keys are a pure function of (topic, slot) so
-        # a foreachBatch replay regenerates the identical key stream.
-        self._rr_slot = 0
 
     # -- A3: buffered ingest with backpressure policy ------------------
     def add(self, data: bytes, partition_key: str | None = None) -> None:
         if partition_key is None:
-            if self.config.partition_key_mode == "round_robin":
-                partition_key = (
-                    f"rr-{self.stream_name}-"
-                    f"{self._rr_slot % self.config.round_robin_width}"
-                )
-                self._rr_slot += 1
-            else:
-                partition_key = generate_partition_key()
+            partition_key = generate_partition_key()
         if len(self._buffer) >= self.config.buffer_size:
             if not self.config.add_blocks_when_buffer_full:
                 raise BufferFullError(
@@ -324,13 +301,12 @@ class BatchProducer:
 
         # A7: exponential backoff while in an error run
         # (batchproducer.go:334-344): 50ms doubling per consecutive
-        # error, capped at backoff_max_s, and clamped to the remaining
+        # error, capped at BACKOFF_MAX_S, and clamped to the remaining
         # flush deadline — a deep error run must not sleep past it.
         if self.consecutive_errors > 0:
             delay = min(
-                self.config.backoff_initial_s
-                * (2 ** (self.consecutive_errors - 1)),
-                self.config.backoff_max_s,
+                BACKOFF_INITIAL_S * (2 ** (self.consecutive_errors - 1)),
+                BACKOFF_MAX_S,
             )
             if deadline is not None:
                 delay = min(delay, max(0.0, deadline - self.clock()))
@@ -401,10 +377,9 @@ class BatchProducer:
             # Fullness counts the in-flight batch — it came out of the
             # buffer and would go right back on requeue.
             if (
-                self.consecutive_errors
-                >= self.config.shed_after_consecutive_errors
+                self.consecutive_errors >= SHED_AFTER_CONSECUTIVE_ERRORS
                 and len(self._buffer) + len(batch)
-                >= self.config.shed_buffer_ratio * self.config.buffer_size
+                >= SHED_BUFFER_RATIO * self.config.buffer_size
             ):
                 self.stats.records_shed += len(batch)
                 self.stats.events.append(f"shed {len(batch)} records")
@@ -566,8 +541,10 @@ def deliver_partition(
     deadline, taken when the flush starts, bounds them all.
 
     A row's topic is its ``topic_col`` value, or ``default_topic`` when
-    that is null or the column is absent. Returns ``(topic, producer,
-    records remaining)`` per topic, in first-seen order.
+    that is null or empty or the column is absent; a row left with no
+    topic raises ``ValueError`` before a client is built for it.
+    Returns ``(topic, producer, records remaining)`` per topic, in
+    first-seen order.
     """
     rows = iter(rows)
     first = next(rows, None)
@@ -586,13 +563,22 @@ def deliver_partition(
     data_i = fields.index(data_col)
     if topic_i is None and default_topic is None:
         raise ValueError(f"rows have no {topic_col!r} column")
-    client = client_factory()  # A2: one per task, on its first row
+    client = None  # A2: one per task, built with its first producer
     producers: dict[str, BatchProducer] = {}
     for row in chain((first,), rows):
         topic = row[topic_i] if topic_i is not None else None
         topic = topic or default_topic
         prod = producers.get(topic)
         if prod is None:
+            if not topic:
+                # No stream to put to: boto3 would reject every call
+                # until the drain deadline, and the mock would accept it.
+                raise ValueError(
+                    f"a row has a null or empty {topic_col!r} and there "
+                    "is no default topic"
+                )
+            if client is None:
+                client = client_factory()
             prod = producers[topic] = BatchProducer(client, topic, config)
         pk = row[pk_i] if pk_i is not None else None
         prod.add(_payload_bytes(row[data_i]), pk)  # A3 (+A16 inside add)

@@ -108,11 +108,6 @@ class MockKinesisClient:
     ):  # noqa: N803
         if ShardIteratorType == "TRIM_HORIZON":
             pos = 0
-        elif ShardIteratorType == "AT_SEQUENCE_NUMBER":
-            # Mock sequence numbers ARE positions (get_records below),
-            # so positioned restarts — the streaming-offset contract —
-            # resolve directly.
-            pos = int(kw["StartingSequenceNumber"])
         elif ShardIteratorType == "AFTER_SEQUENCE_NUMBER":
             # Real Kinesis resume semantics: sequence numbers are
             # opaque, so a restart says "after the last one I read" —

@@ -20,9 +20,10 @@ contract instead of helper functions:
 - **streaming read** — a :class:`SimpleDataSourceStreamReader` whose
   offsets are per-shard sequence positions; each micro-batch reads
   (start, caught-up], exactly the incremental form of the batch
-  drain. Simple readers fetch on the driver — right for control-rate
-  streams; a fully partitioned ``DataSourceStreamReader`` is the
-  high-throughput variant and shares all the per-shard logic here.
+  drain, through the same :func:`read_shard` loop. Simple readers
+  fetch on the driver, so each micro-batch holds at most
+  ``maxRecordsPerBatch`` records there; a deeper backlog is read by
+  the following batches.
 
 Client selection (A17): option ``mock_store_dir`` → the file-backed
 mock (tests, same role as the reference's localstack); otherwise boto3
@@ -36,7 +37,6 @@ import logging
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
     DataSourceStreamWriter,
     DataSourceWriter,
     InputPartition,
@@ -48,6 +48,7 @@ from pyspark.sql.datasource import (
 #: with the shard-parallel reader (r9 review wave 10: two verbatim
 #: copies could drift and break the roundtrip unionByName)
 from frinesis_spark.sources.kinesis import SCHEMA as READ_SCHEMA  # noqa: E402
+from frinesis_spark.sources.kinesis import list_shard_ids, read_shard
 
 FORMAT_NAME = "kinesis_frinesis"
 
@@ -83,17 +84,6 @@ def _client_factory(options: dict):
     return make_boto3_client_factory()
 
 
-def _seq_after(a: str, b: str) -> bool:
-    """True iff sequence number ``a`` is strictly beyond ``b``.
-    Kinesis sequence numbers are big-integer strings that increase
-    within a shard; non-numeric values (an exotic mock) fall back to
-    False, preserving the equality-stop behavior."""
-    try:
-        return int(a) > int(b)
-    except (TypeError, ValueError):
-        return False
-
-
 def _stream_name(options: dict) -> str:
     name = options.get("stream")
     if not name:
@@ -115,19 +105,13 @@ class KinesisBatchReader(DataSourceReader):
         self.factory = _client_factory(self.options)
 
     def partitions(self):
-        from frinesis_spark.sources.kinesis import list_shard_ids
-
         shard_ids = list_shard_ids(self.factory(), self.stream)
         return [_ShardPartition(s) for s in shard_ids] or [_ShardPartition("")]
 
     def read(self, partition: _ShardPartition):
         if not partition.shard_id:
             return
-        from frinesis_spark.sources.kinesis import _drain_shard
-
-        yield from _drain_shard(
-            self.factory(), self.stream, partition.shard_id, 10_000
-        )
+        yield from read_shard(self.factory(), self.stream, partition.shard_id)
 
 
 class KinesisDataSourceWriter(DataSourceWriter):
@@ -203,80 +187,9 @@ class KinesisSimpleStreamReader(SimpleDataSourceStreamReader):
         )
 
     def initialOffset(self) -> dict:
-        from frinesis_spark.sources.kinesis import list_shard_ids
-
         return {s: "" for s in list_shard_ids(self.factory(), self.stream)}
 
-    def _read_shard_from(
-        self,
-        client,
-        shard_id: str,
-        pos: str,
-        stop_seq: str | None = None,
-        max_records: int | None = None,
-    ):
-        """Drain one shard from ``pos`` ("" → TRIM_HORIZON, else the
-        last-read sequence number → AFTER_SEQUENCE_NUMBER). Returns
-        (rows, last-read seq). With ``stop_seq``, stops after emitting
-        that record (inclusive replay bound for ``readBetweenOffsets``
-        — no ordering assumption on the opaque sequence numbers)."""
-        if not pos:
-            it = client.get_shard_iterator(
-                StreamName=self.stream,
-                ShardId=shard_id,
-                ShardIteratorType="TRIM_HORIZON",
-            )["ShardIterator"]
-        else:
-            it = client.get_shard_iterator(
-                StreamName=self.stream,
-                ShardId=shard_id,
-                ShardIteratorType="AFTER_SEQUENCE_NUMBER",
-                StartingSequenceNumber=str(pos),
-            )["ShardIterator"]
-        rows, last = [], pos
-        while it:
-            if max_records is not None and len(rows) >= max_records:
-                break
-            # Budget-aware Limit (r9 review wave 8): the budget check
-            # between calls alone let ONE get_records overshoot
-            # per-shard budgets by up to 10k records into the
-            # driver-side list.
-            limit = 10_000
-            if max_records is not None:
-                limit = max(1, min(limit, max_records - len(rows)))
-            resp = client.get_records(ShardIterator=it, Limit=limit)
-            for rec in resp.get("Records", []):
-                seq = str(rec["SequenceNumber"])
-                # Replay bound safety (r9 review wave 8): if the
-                # stop record itself is gone (aged past retention),
-                # the equality stop never fires and the replay would
-                # silently drain to the live tip — records beyond the
-                # committed end belong to LATER batches. Kinesis
-                # sequence numbers increase within a shard, so a
-                # numeric beyond-the-bound record ends the replay
-                # WITHOUT being included.
-                if stop_seq is not None and _seq_after(seq, stop_seq):
-                    return rows, last
-                last = seq
-                rows.append(
-                    (
-                        self.stream,
-                        shard_id,
-                        last,
-                        rec.get("PartitionKey"),
-                        bytes(rec.get("Data") or b""),
-                    )
-                )
-                if stop_seq is not None and last == stop_seq:
-                    return rows, last
-            it = resp.get("NextShardIterator")
-            if not resp.get("Records") and not resp.get("MillisBehindLatest"):
-                break
-        return rows, last
-
     def read(self, start: dict):
-        from frinesis_spark.sources.kinesis import list_shard_ids
-
         client = self.factory()
         positions = dict(start)
         # Resharding pickup: new shards start from TRIM_HORIZON.
@@ -292,8 +205,11 @@ class KinesisSimpleStreamReader(SimpleDataSourceStreamReader):
         per_shard = max(1, self.max_records // max(1, len(positions)))
         for shard_id, pos in positions.items():
             try:
-                shard_rows, last = self._read_shard_from(
-                    client, shard_id, pos, max_records=per_shard
+                shard_rows = list(
+                    read_shard(
+                        client, self.stream, shard_id, pos,
+                        max_records=per_shard,
+                    )
                 )
             except Exception as exc:  # noqa: BLE001 — boto3 client error
                 # A resharded-away shard that has aged past retention
@@ -323,7 +239,8 @@ class KinesisSimpleStreamReader(SimpleDataSourceStreamReader):
                 )
                 continue
             rows.extend(shard_rows)
-            end[shard_id] = last
+            # Last-read sequence number; an empty read keeps the start.
+            end[shard_id] = shard_rows[-1][2] if shard_rows else pos
         return iter(rows), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
@@ -333,10 +250,11 @@ class KinesisSimpleStreamReader(SimpleDataSourceStreamReader):
             pos = start.get(shard_id, "")
             if not stop or stop == pos:
                 continue  # shard had no data in this batch
-            shard_rows, _ = self._read_shard_from(
-                client, shard_id, pos, stop_seq=str(stop)
+            rows.extend(
+                read_shard(
+                    client, self.stream, shard_id, pos, stop_seq=str(stop)
+                )
             )
-            rows.extend(shard_rows)
         return iter(rows)
 
     def commit(self, end: dict) -> None:
@@ -366,116 +284,6 @@ class KinesisDataSourceStreamWriter(DataSourceStreamWriter):
         return None
 
 
-class _ShardSlice(InputPartition):
-    def __init__(self, shard_id: str, start: int, end: int):
-        self.shard_id = shard_id
-        self.start = start
-        self.end = end
-
-
-class KinesisPartitionedStreamReader(DataSourceStreamReader):
-    """High-throughput streaming variant: each micro-batch plans one
-    ``InputPartition`` per shard slice [start, end) and EXECUTORS read
-    their shard directly — data never moves through the driver
-    (contrast the simple reader, which prefetches driver-side). This
-    is the reader shape that scales with shard count.
-
-    Offset planning needs the log tip per shard (``latestOffset``);
-    the mock store exposes it directly. Real Kinesis has no cheap
-    "latest sequence" control call — a production deployment caps each
-    batch with a max-records budget instead (rate limiting, A3's
-    backpressure analog), so this reader requires the mock path and
-    raises otherwise, which makes Spark fall back to the simple
-    reader.
-    """
-
-    def __init__(self, options: dict):
-        self.options = dict(options)
-        self.stream = _stream_name(self.options)
-        if (
-            not self.options.get("mock_store_dir")
-            or self.options.get("partitioned_stream", "false").lower()
-            != "true"
-        ):
-            # Spark's _streamReader catches exactly this error type and
-            # falls back to simpleStreamReader.
-            from pyspark.errors import PySparkNotImplementedError
-
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={
-                    "feature": (
-                        "partitioned kinesis stream reader (opt in with "
-                        "partitioned_stream=true; mock store only — the "
-                        "boto3 path uses the simple reader)"
-                    )
-                },
-            )
-        self.factory = _client_factory(self.options)
-
-    def initialOffset(self) -> dict:
-        from frinesis_spark.sources.kinesis import list_shard_ids
-
-        return {s: 0 for s in list_shard_ids(self.factory(), self.stream)}
-
-    def latestOffset(self) -> dict:
-        client = self.factory()
-        from frinesis_spark.sources.kinesis import list_shard_ids
-
-        return {
-            s: len(client._shard_log(self.stream))
-            for s in list_shard_ids(client, self.stream)
-        }
-
-    def partitions(self, start: dict, end: dict):
-        return [
-            _ShardSlice(s, int(start.get(s, 0)), int(e))
-            for s, e in end.items()
-            if int(e) > int(start.get(s, 0))
-        ] or [_ShardSlice("", 0, 0)]
-
-    def read(self, partition: _ShardSlice):
-        if not partition.shard_id:
-            return
-        client = self.factory()
-        # Conditional kwargs (r9 review wave 8): the real Kinesis API
-        # rejects TRIM_HORIZON + StartingSequenceNumber with
-        # InvalidArgumentException — latent behind the mock-only
-        # guard, but this class is documented as the shared-logic
-        # high-throughput variant.
-        it_kwargs = dict(
-            StreamName=self.stream,
-            ShardId=partition.shard_id,
-        )
-        if partition.start == 0:
-            it_kwargs["ShardIteratorType"] = "TRIM_HORIZON"
-        else:
-            it_kwargs["ShardIteratorType"] = "AT_SEQUENCE_NUMBER"
-            it_kwargs["StartingSequenceNumber"] = str(partition.start)
-        it = client.get_shard_iterator(**it_kwargs)["ShardIterator"]
-        while it:
-            resp = client.get_records(ShardIterator=it, Limit=10_000)
-            for rec in resp.get("Records", []):
-                if int(rec["SequenceNumber"]) >= partition.end:
-                    return
-                yield (
-                    self.stream,
-                    partition.shard_id,
-                    rec.get("SequenceNumber"),
-                    rec.get("PartitionKey"),
-                    bytes(rec.get("Data") or b""),
-                )
-            it = resp.get("NextShardIterator")
-            if not resp.get("Records") and not resp.get("MillisBehindLatest"):
-                return
-
-    def commit(self, end: dict) -> None:
-        return None
-
-    def stop(self) -> None:
-        return None
-
-
 class KinesisDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
@@ -500,11 +308,6 @@ class KinesisDataSource(DataSource):
 
     def streamWriter(self, schema, overwrite: bool) -> KinesisDataSourceStreamWriter:
         return KinesisDataSourceStreamWriter(self.options)
-
-    def streamReader(self, schema) -> KinesisPartitionedStreamReader:
-        # Raises NotImplementedError on the boto3 path → Spark falls
-        # back to simpleStreamReader below.
-        return KinesisPartitionedStreamReader(self.options)
 
     def simpleStreamReader(self, schema) -> KinesisSimpleStreamReader:
         return KinesisSimpleStreamReader(self.options)

@@ -16,7 +16,7 @@ touches): CreateStream, DescribeStream, DeleteStream, ListShards,
 PutRecords, GetShardIterator, GetRecords, SplitShard. Streams become
 ACTIVE immediately. Shard iterators are stateless base64 tokens of
 (stream, shard, offset), so GetRecords pagination and the
-TRIM_HORIZON catch-up contract (_drain_shard, sources/kinesis.py:46)
+TRIM_HORIZON catch-up contract (read_shard, sources/kinesis.py)
 behave like the real service's.
 
 Resharding model (r10, r9 verdict item 4): ``SplitShard`` CLOSES the

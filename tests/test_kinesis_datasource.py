@@ -97,36 +97,6 @@ def test_write_fails_task_on_undelivered_records():
         writer.write(iter(rows))
 
 
-def test_partitioned_stream_reader_incremental(registered, tmp_path):
-    """The executor-side (partitioned) stream reader delivers each
-    record exactly once across micro-batches."""
-    spark = registered
-    store = str(tmp_path / "pstore")
-    _write(spark, store, [f"x{i}" for i in range(6)], stream="s2")
-    q = (
-        spark.readStream.format(FORMAT_NAME)
-        .option("stream", "s2")
-        .option("mock_store_dir", store)
-        .option("partitioned_stream", "true")
-        .load()
-        .writeStream.format("memory")
-        .queryName("kds_part_sink")
-        .option("checkpointLocation", str(tmp_path / "pckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        assert spark.sql("SELECT * FROM kds_part_sink").count() == 6
-        _write(spark, store, ["y0", "y1"], stream="s2")
-        q.processAllAvailable()
-        rows = spark.sql("SELECT data FROM kds_part_sink").collect()
-        assert sorted(bytes(r.data).decode() for r in rows) == sorted(
-            [f"x{i}" for i in range(6)] + ["y0", "y1"]
-        )
-    finally:
-        q.stop()
-
-
 def test_stream_writer_end_to_end(registered, tmp_path, sf_dir):
     """readStream(events) → writeStream.format(kinesis) — the
     reference's deployment shape; delivery multiset checked via the
@@ -301,6 +271,51 @@ def test_wire_roundtrip_through_stub(registered):
         assert sorted(bytes(r.data).decode() for r in rows) == sorted(payloads)
         # Both shards participated (the md5 key routing splits 25 keys).
         assert len({r.shard_id for r in rows}) == 2
+
+
+def test_stream_reader_caps_each_batch_at_max_records(tmp_path):
+    """``maxRecordsPerBatch`` bounds each micro-batch's driver-side
+    read: no GetRecords asks for more than the budget, the next batch
+    resumes after the last record read, and a replay of a batch's
+    offsets returns exactly that batch."""
+    from frinesis_spark.sinks.mock import MockKinesisClient
+    from frinesis_spark.sources.kinesis_datasource import (
+        KinesisSimpleStreamReader,
+    )
+
+    limits = []
+
+    class LimitLog(MockKinesisClient):
+        def get_records(self, ShardIterator, Limit=10_000):  # noqa: N803
+            limits.append(Limit)
+            return super().get_records(ShardIterator, Limit)
+
+    store = str(tmp_path / "store")
+    client = LimitLog(store_dir=store)
+    client.put_records(
+        Records=[
+            {"Data": f"m{i}".encode(), "PartitionKey": f"p{i}"}
+            for i in range(10)
+        ],
+        StreamName="s",
+    )
+    reader = KinesisSimpleStreamReader(
+        {"stream": "s", "mock_store_dir": store, "maxrecordsperbatch": "4"}
+    )
+    reader.factory = lambda: client
+
+    def data(rows):
+        return [bytes(r[4]).decode() for r in rows]
+
+    start = reader.initialOffset()
+    rows, end = reader.read(start)
+    assert data(rows) == ["m0", "m1", "m2", "m3"]
+    assert limits and max(limits) <= 4
+    rows2, _ = reader.read(end)
+    assert data(rows2) == ["m4", "m5", "m6", "m7"]
+    assert data(reader.readBetweenOffsets(start, end)) == [
+        "m0", "m1", "m2", "m3"
+    ]
 
 
 # --- shard retirement specificity (ADVICE r7) ------------------------------

@@ -12,8 +12,9 @@ reference's delivery scenarios against it
 Unlike the mock-backed unit tests, these exercise the real boto3 wire
 shape (``Records``/``FailedRecordCount`` casing, binary ``Data``
 encoding, stream lifecycle control-plane calls) — the layer the mock
-is silent on. Read-back goes through the engine's own shard-drain
-loop (sources/kinesis.py), so both directions of the wire are covered.
+is silent on. Read-back goes through the engine's own shard-read
+loop (``read_shard`` in sources/kinesis.py), so both directions of the
+wire are covered.
 
 Endpoint selection: if ``KINESIS_ENDPOINT`` is set, that live API
 (localstack / kinesalite — the reference's docker-compose flow,
@@ -127,7 +128,7 @@ def stream(kin, request):
 def _read_back(kin, stream_name: str, expected: int, timeout_s: float = 30):
     """Drain the stream through the engine's own shard read loop until
     ``expected`` records arrive (integration_test.go:112-143)."""
-    from frinesis_spark.sources.kinesis import _drain_shard, list_shard_ids
+    from frinesis_spark.sources.kinesis import list_shard_ids, read_shard
 
     got: list[str] = []
     deadline = time.monotonic() + timeout_s
@@ -135,7 +136,7 @@ def _read_back(kin, stream_name: str, expected: int, timeout_s: float = 30):
         got = [
             row[4].decode()
             for shard in list_shard_ids(kin, stream_name)
-            for row in _drain_shard(kin, stream_name, shard, 10_000)
+            for row in read_shard(kin, stream_name, shard)
         ]
         if len(got) < expected:
             time.sleep(1)

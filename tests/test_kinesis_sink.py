@@ -15,6 +15,8 @@ from __future__ import annotations
 import pytest
 
 from frinesis_spark.sinks.kinesis import (
+    BACKOFF_INITIAL_S,
+    BACKOFF_MAX_S,
     MAX_KINESIS_BATCH_SIZE,
     BatchProducer,
     BufferFullError,
@@ -59,7 +61,7 @@ def make_producer(client=None, clock=None, **cfg_kwargs):
         {"batch_size": 0},
         {"batch_size": MAX_KINESIS_BATCH_SIZE + 1},
         {"buffer_size": 0},
-        {"flush_interval_s": 0.01},
+        {"flush_timeout_s": -1.0},
         {"max_attempts_per_record": 0},
     ],
 )
@@ -242,7 +244,6 @@ def test_writer_raises_on_undelivered(spark):
         MockClientFactory(should_err=True),
         KinesisSinkConfig(
             flush_timeout_s=0.2,
-            backoff_initial_s=0.05,
             # the writer REQUIRES the blocking policy (it rejects a
             # guaranteed-failure non-blocking config at construction)
             add_blocks_when_buffer_full=True,
@@ -320,31 +321,32 @@ def test_stats_ticker_emits_during_slow_drain():
 
 def test_backoff_is_capped():
     """Uncapped 0.05*2^(n-1) reaches 25.6s at n=10; the cap bounds any
-    single backoff sleep at backoff_max_s."""
-    prod, client, clock = make_producer(buffer_size=100, backoff_max_s=2.0)
+    single backoff sleep at BACKOFF_MAX_S."""
+    prod, client, clock = make_producer(buffer_size=100)
     client.should_err = True
     prod.add(b"x")
     for _ in range(12):
         prod._send_batch(500)
     t0 = clock()
     prod._send_batch(500)  # 13th failure: uncapped would be ~204s
-    assert clock() - t0 == pytest.approx(2.0)
+    assert clock() - t0 == pytest.approx(BACKOFF_MAX_S)
 
 
 def test_backoff_clamped_to_flush_deadline():
     """A deep error run must not sleep past the drain deadline: flush()
     with timeout_s returns within ~the budget even while every call
     fails (the deadline is real, not advisory)."""
-    prod, client, clock = make_producer(buffer_size=100, backoff_max_s=60.0)
+    prod, client, clock = make_producer(buffer_size=100)
     client.should_err = True
-    prod.consecutive_errors = 10  # next uncapped delay: 25.6s
+    prod.consecutive_errors = 10  # next delay: the BACKOFF_MAX_S cap
     for i in range(5):
         prod.add(b"x")
+    timeout_s = BACKOFF_MAX_S * 0.75  # below the cap: the clamp binds
     t0 = clock()
-    sent, remaining = prod.flush(timeout_s=3.0)
+    sent, remaining = prod.flush(timeout_s=timeout_s)
     assert sent == 0 and remaining == 5
-    # slept at most to the deadline + one final (unslept) attempt
-    assert clock() - t0 <= 3.0 + 1e-6
+    # one backoff, clamped to end exactly at the deadline
+    assert clock() - t0 == pytest.approx(timeout_s)
 
 
 def test_malformed_response_requeues_batch():
@@ -588,7 +590,6 @@ def test_failing_topics_share_one_drain_deadline(spark, tmp_path):
     log = str(tmp_path / "calls.log")
     cfg = KinesisSinkConfig(
         flush_timeout_s=0.3,
-        backoff_initial_s=0.05,
         add_blocks_when_buffer_full=True,
     )
     writer = KinesisBatchWriter(_timed_client_factory(log, fail=True), cfg)
@@ -601,7 +602,7 @@ def test_failing_topics_share_one_drain_deadline(spark, tmp_path):
     calls = _logged_calls(log)
     assert {s for *_, s in calls} == {"t0", "t1", "t2"}
     span = calls[-1][0] - calls[0][0]
-    assert span <= cfg.flush_timeout_s + cfg.backoff_initial_s, calls
+    assert span <= cfg.flush_timeout_s + BACKOFF_INITIAL_S, calls
 
 
 def test_writer_runs_one_delivery_job_per_batch(spark):
@@ -667,3 +668,25 @@ def test_more_topics_than_flush_threads_share_one_client():
     assert [left for *_, left in results] == [0] * topics
     assert sum(p.stats.records_sent for _, p, _ in results) == len(rows)
     assert sorted(client.calls) == [200] * topics + [500] * topics
+
+
+@pytest.mark.parametrize("topic", [None, ""])
+def test_writer_rejects_row_without_topic(tmp_path, topic):
+    """A row whose topic is null or empty, with no default topic, fails
+    the task with an error naming the topic column, before a client is
+    built: nothing is put to a stream named ``None``."""
+    from pyspark.sql import Row
+
+    store = str(tmp_path / "store")
+    built = []
+
+    def factory():
+        built.append(1)
+        return MockKinesisClient(store_dir=store)
+
+    writer = KinesisBatchWriter(factory, topic_col="dest")
+    rows = [Row(dest=topic, data=b"x", partition_key="k")]
+    with pytest.raises(ValueError, match="null or empty 'dest'"):
+        list(writer._write_partition(iter(rows)))
+    assert built == []
+    assert read_back(store) == []

@@ -10,9 +10,9 @@ from __future__ import annotations
 from frinesis_spark.sinks.kinesis import KinesisBatchWriter
 from frinesis_spark.sinks.mock import MockClientFactory, MockKinesisClient
 from frinesis_spark.sources.kinesis import (
-    _drain_shard,
     list_shard_ids,
     read_kinesis,
+    read_shard,
 )
 
 
@@ -32,7 +32,7 @@ def test_drain_shard_pages_through(tmp_path):
     store = str(tmp_path / "store")
     client = _fill(store, "s1", [f"m{i}" for i in range(25)])
     [shard] = list_shard_ids(client, "s1")
-    recs = list(_drain_shard(client, "s1", shard, limit_per_call=10))
+    recs = list(read_shard(client, "s1", shard, limit=10))
     assert len(recs) == 25  # 3 GetRecords pages
     assert sorted(r[4].decode() for r in recs) == sorted(
         f"m{i}" for i in range(25)

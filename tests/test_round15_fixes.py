@@ -262,72 +262,16 @@ class TestOrAmplifiedPairPass:
 
 
 class TestRoundRobinPartitionKeys:
-    """r15 stretch (r14 verdict item 8): deterministic per-topic
-    round-robin fallback keys beside the reference's UUID-per-record
-    A16 behavior — exactly-even per-key traffic, bounded key
-    cardinality, replay-stable; valid only under the sink's orderless
-    delivery contract."""
-
-    def _producer(self, **cfg_kwargs):
-        from frinesis_spark.sinks.kinesis import (
-            BatchProducer,
-            KinesisSinkConfig,
-        )
-        from frinesis_spark.sinks.mock import MockKinesisClient
-
-        cfg = KinesisSinkConfig(**cfg_kwargs)
-        return BatchProducer(MockKinesisClient(), "topic-a", cfg)
-
-    def test_round_robin_cycles_fixed_pool(self):
-        prod = self._producer(
-            partition_key_mode="round_robin", round_robin_width=4
-        )
-        for _ in range(10):
-            prod.add(b"x")
-        keys = [pk for _, pk, _ in prod._buffer]
-        assert keys[:4] == [
-            "rr-topic-a-0", "rr-topic-a-1", "rr-topic-a-2", "rr-topic-a-3"
-        ]
-        assert keys[4] == "rr-topic-a-0"  # wraps
-        # exactly-even spread: max/min per-key count differ by <= 1
-        from collections import Counter
-
-        counts = Counter(keys).values()
-        assert max(counts) - min(counts) <= 1
-
-    def test_replay_regenerates_identical_key_stream(self):
-        a = self._producer(
-            partition_key_mode="round_robin", round_robin_width=8
-        )
-        b = self._producer(
-            partition_key_mode="round_robin", round_robin_width=8
-        )
-        for _ in range(20):
-            a.add(b"x")
-            b.add(b"x")
-        assert [k for _, k, _ in a._buffer] == [k for _, k, _ in b._buffer]
+    """Fallback partition keys: a fresh UUIDv4 per record (A16,
+    sink.go:76 / utils.go:16-19); a caller's key always wins."""
 
     def test_uuid_default_unchanged_and_explicit_key_wins(self):
-        prod = self._producer()  # default mode
+        from frinesis_spark.sinks.kinesis import BatchProducer
+        from frinesis_spark.sinks.mock import MockKinesisClient
+
+        prod = BatchProducer(MockKinesisClient(), "topic-a")
         prod.add(b"x")
         prod.add(b"y", partition_key="explicit")
         keys = [pk for _, pk, _ in prod._buffer]
         assert len(keys[0]) == 36 and keys[0].count("-") == 4  # UUIDv4
         assert keys[1] == "explicit"
-        rr = self._producer(
-            partition_key_mode="round_robin", round_robin_width=4
-        )
-        rr.add(b"x", partition_key="explicit")
-        assert rr._buffer[0][1] == "explicit"  # caller key always wins
-
-    def test_mode_validation(self):
-        import pytest as _pytest
-
-        from frinesis_spark.sinks.kinesis import ConfigError, KinesisSinkConfig
-
-        with _pytest.raises(ConfigError, match="partition_key_mode"):
-            KinesisSinkConfig(partition_key_mode="bogus").validate()
-        with _pytest.raises(ConfigError, match="round_robin_width"):
-            KinesisSinkConfig(
-                partition_key_mode="round_robin", round_robin_width=0
-            ).validate()

@@ -728,9 +728,7 @@ def test_stream_reader_replay_stops_at_vanished_bound(tmp_path):
     out must stop BEFORE the first record beyond the bound instead of
     silently draining to the live tip."""
     from frinesis_spark.sinks.mock import MockKinesisClient
-    from frinesis_spark.sources.kinesis_datasource import (
-        KinesisSimpleStreamReader,
-    )
+    from frinesis_spark.sources.kinesis import read_shard
 
     store = str(tmp_path / "store")
     client = MockKinesisClient(store_dir=store)
@@ -739,22 +737,14 @@ def test_stream_reader_replay_stops_at_vanished_bound(tmp_path):
             Records=[{"Data": f"m{i}".encode(), "PartitionKey": f"p{i}"}],
             StreamName="s",
         )
-    reader = KinesisSimpleStreamReader(
-        {"stream": "s", "mockstoredir": store}
-    )
+    shard = "shardId-000000000000"
     # Replay [after seq 1 .. seq 5]: normal inclusive stop.
-    rows, last = reader._read_shard_from(
-        client, "shardId-000000000000", "1", stop_seq="5"
-    )
+    rows = list(read_shard(client, "s", shard, "1", stop_seq="5"))
     assert [r[2] for r in rows] == ["2", "3", "4", "5"]
-    # stop_seq "4.5-like" gap: a bound whose record no longer exists
-    # (simulate with a never-assigned sequence between 4 and 5 is not
-    # expressible in the positional mock, so use a bound BELOW the
-    # stream head: all records are beyond it → empty replay).
-    rows, last = reader._read_shard_from(
-        client, "shardId-000000000000", "5", stop_seq="3"
-    )
-    assert rows == []  # everything after pos is beyond the bound
+    # A bound whose record no longer exists cannot be made in the
+    # positional mock, so use a bound BELOW the resume point: every
+    # record is beyond it → empty replay.
+    assert list(read_shard(client, "s", shard, "5", stop_seq="3")) == []
 
 
 def test_sink_writer_missing_partition_key_column(spark, tmp_path):

@@ -24,7 +24,14 @@ def _sources() -> list[Path]:
 
 def test_every_source_compiles_without_warnings():
     sources = _sources()
-    assert len(sources) > 100  # the globs still find the tree
+    # The globs still find the tree: one file from each globbed
+    # directory, one of them in a subpackage (rglob, not glob).
+    found = {p.relative_to(REPO).as_posix() for p in sources}
+    assert {
+        "frinesis_spark/sources/kinesis.py",
+        "tests/conftest.py",
+        "tools/drive_driver.py",
+    } <= found
     failures = []
     for path in sources:
         with warnings.catch_warnings():
