@@ -14,6 +14,7 @@ import shutil
 import sys
 import tempfile
 import weakref
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -42,8 +43,8 @@ def _stat_sig(paths: list[str]) -> tuple:
     """Per-file (path, size, mtime_ns) signature — ONE stat per file.
 
     The shared cheap-invalidation fingerprint idiom (same shape as
-    caches.corpus_fingerprint and runner._stage_dir's sig; those hash
-    theirs because their keys travel, this one stays in-process)."""
+    caches.corpus_fingerprint, which hashes its signature because its
+    keys travel; this one stays in-process)."""
     out = []
     for p in paths:
         st = os.stat(p)
@@ -331,54 +332,68 @@ def _split_staged_path(sf_dir: str, name: str) -> str:
     return staged if staged is not None else orig
 
 
-def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one table of the schema as a DataFrame (lazy parquet scan).
+def read_events(
+    spark: SparkSession,
+    path: str,
+    load: Callable[[str], DataFrame] | None = None,
+) -> DataFrame:
+    """The events table at ``path`` (a file or a directory of parquet
+    files) with ``ts`` as TIMESTAMP_NTZ whatever the fixture writes —
+    the one place the ns/µs decision lives, shared by :func:`table` and
+    the stream reader (``streaming.runner.replay``, which passes its
+    ``readStream`` as ``load``; the default is ``spark.read.parquet``).
 
-    ``events.ts`` is normalized to TIMESTAMP_NTZ whatever the fixture
-    writes: parquet TIMESTAMP(NANOS) is read as raw nanos
+    Parquet TIMESTAMP(NANOS) is read as raw nanos
     (``spark.sql.legacy.parquet.nanosAsLong`` — the vectorized reader
     rejects ns timestamps) and converted with integer ``div`` (lossless:
-    the generator emits µs-precision values); native µs timestamps pass
+    the generator emits µs-precision values); native timestamps pass
     straight through with a no-op-or-tz-strip cast. The branch is driven
     by a footer probe (:func:`events_ts_unit`), not a hard-coded
     assumption — the fixture changed ns→µs between rounds once already.
     """
+    from pyspark.sql import functions as F
+
+    # The LTZ→NTZ cast below renders wall-clock in the SESSION zone: on
+    # a non-UTC session every events.ts would silently shift by the UTC
+    # offset vs the naive-timestamp DuckDB oracle (r9 review wave 6).
+    # get_spark pins UTC; an externally built session must too — fail
+    # loudly instead of diverging quietly.
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    if tz not in ("UTC", "Etc/UTC", "GMT", "Z", "+00:00"):
+        raise RuntimeError(
+            f"events requires spark.sql.session.timeZone=UTC (got "
+            f"{tz!r}): the ts normalization and every oracle compare "
+            "wall-clocks in UTC — build the session via "
+            "frinesis_spark.session.get_spark or set the conf"
+        )
+    if events_ts_unit(path) == "ns":
+        # Set before ``load`` analyses the files. The flag is
+        # session-global by Spark's design (analysis-time), so it is
+        # deliberately not restored: restoring it would break this
+        # DataFrame's own lazy re-analysis.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        ts = F.expr("timestamp_micros(ts div 1000)")
+    else:
+        ts = F.col("ts")
+    df = (load or spark.read.parquet)(path)
+    return df.withColumn("ts", ts.cast("timestamp_ntz"))
+
+
+def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one table of the schema as a DataFrame (lazy parquet scan).
+
+    ``events`` goes through :func:`read_events`, which normalizes
+    ``ts`` to TIMESTAMP_NTZ whatever the fixture's physical type.
+    """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    path = _split_staged_path(sf_dir, name)
     if name == "events":
-        from pyspark.sql import functions as F
-
-        # The LTZ→NTZ cast below renders wall-clock in the SESSION
-        # zone: on a non-UTC session every events.ts would silently
-        # shift by the UTC offset vs the naive-timestamp DuckDB oracle
-        # (r9 review wave 6). get_spark pins UTC; an externally built
-        # session must too — fail loudly instead of diverging quietly.
-        tz = spark.conf.get("spark.sql.session.timeZone")
-        if tz not in ("UTC", "Etc/UTC", "GMT", "Z", "+00:00"):
-            raise RuntimeError(
-                f"events requires spark.sql.session.timeZone=UTC (got "
-                f"{tz!r}): the ts normalization and every oracle compare "
-                "wall-clocks in UTC — build the session via "
-                "frinesis_spark.session.get_spark or set the conf"
-            )
         # Probe the STAGED path: the relayout preserves physical types
         # (v2.6 write), but classification must follow whatever file
         # the scan actually reads.
-        path = _split_staged_path(sf_dir, name)
-        if events_ts_unit(path) == "ns":
-            # NOTE the same flag+div-1000 branch exists in
-            # streaming/runner.events_stream — change BOTH. The flag
-            # is session-global by Spark's design (analysis-time), so
-            # it is deliberately not restored: restoring it would
-            # break this DataFrame's own lazy re-analysis.
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = spark.read.parquet(path)
-            return df.withColumn(
-                "ts", F.expr("CAST(timestamp_micros(ts div 1000) AS timestamp_ntz)")
-            )
-        df = spark.read.parquet(path)
-        return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    return spark.read.parquet(_split_staged_path(sf_dir, name))
+        return read_events(spark, path)
+    return spark.read.parquet(path)
 
 
 def spread(df: DataFrame, min_parts: int = 0) -> DataFrame:

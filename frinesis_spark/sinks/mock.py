@@ -37,6 +37,7 @@ class MockKinesisClient:
     # injectables (kept local to the process; unit tests only)
     advance_clock: object = None
     calls: list = field(default_factory=list)
+    _decoded: dict = field(default_factory=dict, repr=False)
 
     def put_records(self, Records, StreamName):  # noqa: N803 (boto3 API)
         self.calls.append(len(Records))
@@ -70,7 +71,9 @@ class MockKinesisClient:
                 self.store_dir,
                 f"call_{time.time_ns():020d}_{uuid.uuid4().hex}.jsonl",
             )
-            with open(path, "w") as f:
+            # Written under a temp name and renamed into place, so a
+            # reader never sees (and caches) a half-written file.
+            with open(path + ".tmp", "w") as f:
                 for rec in delivered:
                     f.write(
                         json.dumps(
@@ -88,6 +91,7 @@ class MockKinesisClient:
                         )
                         + "\n"
                     )
+            os.replace(path + ".tmp", path)
         return {"FailedRecordCount": failed, "Records": results}
 
     # -- read side (GetRecords surface, integration_test.go:112-143) ---
@@ -98,7 +102,18 @@ class MockKinesisClient:
     # mock, like the reference, guarantees delivery, not order.
 
     def _shard_log(self, stream: str) -> list[dict]:
-        return [r for r in read_back(self.store_dir) if r["stream"] == stream]
+        # Store files are write-once and uniquely named, so each one is
+        # decoded once per client and cached by name; re-reading the
+        # whole store per call made paging a shard quadratic.
+        out: list[dict] = []
+        for name in _store_files(self.store_dir):
+            recs = self._decoded.get(name)
+            if recs is None:
+                recs = self._decoded[name] = _read_file(
+                    os.path.join(self.store_dir, name)
+                )
+            out.extend(r for r in recs if r["stream"] == stream)
+        return out
 
     def list_shards(self, StreamName):  # noqa: N803 (boto3 API)
         return {"Shards": [{"ShardId": "shardId-000000000000"}]}
@@ -154,22 +169,33 @@ class MockClientFactory:
         )
 
 
+def _store_files(store_dir: str | None) -> list[str]:
+    """Store file names in log order. Sorted so shard-iterator offsets
+    are stable across calls."""
+    if not store_dir or not os.path.isdir(store_dir):
+        return []
+    return sorted(n for n in os.listdir(store_dir) if n.endswith(".jsonl"))
+
+
+def _read_file(path: str) -> list[dict]:
+    """One store file's records, ``data`` decoded to bytes."""
+    out: list[dict] = []
+    with open(path) as f:
+        for line in f:
+            if not line.strip():
+                continue
+            rec = json.loads(line)
+            rec["data"] = base64.b64decode(rec.pop("data_b64"))
+            out.append(rec)
+    return out
+
+
 def read_back(store_dir: str) -> list[dict]:
     """All records 'delivered' to the mock, any order — the multiset
     the reference compares against sent messages
     (integration_test.go:151-157). ``data`` is returned as the exact
     ``bytes`` that were sent (base64 store roundtrip)."""
     out: list[dict] = []
-    if not os.path.isdir(store_dir):
-        return out
-    # Sorted so shard-iterator offsets are stable across calls.
-    for name in sorted(os.listdir(store_dir)):
-        if name.endswith(".jsonl"):
-            with open(os.path.join(store_dir, name)) as f:
-                for line in f:
-                    if not line.strip():
-                        continue
-                    rec = json.loads(line)
-                    rec["data"] = base64.b64decode(rec.pop("data_b64"))
-                    out.append(rec)
+    for name in _store_files(store_dir):
+        out.extend(_read_file(os.path.join(store_dir, name)))
     return out

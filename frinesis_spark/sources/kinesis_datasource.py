@@ -185,63 +185,85 @@ class KinesisSimpleStreamReader(SimpleDataSourceStreamReader):
         self.max_records = int(
             self.options.get("maxrecordsperbatch", 10_000)
         )
+        self._turn = 0
 
     def initialOffset(self) -> dict:
         return {s: "" for s in list_shard_ids(self.factory(), self.stream)}
 
     def read(self, start: dict):
         client = self.factory()
-        positions = dict(start)
+        end = dict(start)
         # Resharding pickup: new shards start from TRIM_HORIZON.
         for shard_id in list_shard_ids(client, self.stream):
-            positions.setdefault(shard_id, "")
+            end.setdefault(shard_id, "")
         rows: list = []
-        end: dict = {}
-        # Per-batch record budget, split across shards: an unbounded
+        # Per-batch record budget, shared across shards: an unbounded
         # drain-to-tip buffers the ENTIRE retained backlog in this
         # driver-side list on the first batch (and against sustained
-        # ingest may never catch the tip). Unread backlog is simply
-        # the next batch's starting offset.
-        per_shard = max(1, self.max_records // max(1, len(positions)))
-        for shard_id, pos in positions.items():
-            try:
-                shard_rows = list(
-                    read_shard(
-                        client, self.stream, shard_id, pos,
-                        max_records=per_shard,
-                    )
-                )
-            except Exception as exc:  # noqa: BLE001 — boto3 client error
-                # A resharded-away shard that has aged past retention
-                # vanishes from the stream; keeping it in the offset
-                # map would fail THIS and every retried batch forever.
-                # Retire it — but only on the SPECIFIC AWS error code,
-                # and only after confirming the shard (not the whole
-                # stream) is what vanished: a stream-level
-                # ResourceNotFound (stream deleted/renamed mid-run)
-                # must surface, not silently retire every shard and
-                # read empty batches forever (ADVICE r7).
-                code = (
-                    getattr(exc, "response", None) or {}
-                ).get("Error", {}).get("Code", "")
-                if code != "ResourceNotFoundException":
-                    raise
-                live = list_shard_ids(client, self.stream)  # raises if
-                # the stream itself is gone — the failure we must keep
-                if shard_id in live:
-                    raise  # shard exists; the error was about the
-                    # stream/iterator state, not shard retirement
-                _LOG.warning(
-                    "kinesis shard %s/%s vanished (aged past "
-                    "retention after reshard); retiring its offset",
-                    self.stream,
-                    shard_id,
-                )
-                continue
-            rows.extend(shard_rows)
-            # Last-read sequence number; an empty read keeps the start.
-            end[shard_id] = shard_rows[-1][2] if shard_rows else pos
+        # ingest may never catch the tip). Each pass offers every shard
+        # that may still hold records an equal share of what is left
+        # (at least one record); a shard that returns less than its
+        # share is caught up, and its unused share goes to the others
+        # on the next pass. The batch never exceeds the budget, and
+        # unread backlog is simply the next batch's starting offset.
+        # The pass order rotates batch by batch, so a budget smaller
+        # than the shard count does not always favour the same shards.
+        shards = list(end)
+        turn = self._turn % max(1, len(shards))
+        self._turn += 1
+        active = shards[turn:] + shards[:turn]
+        while active and len(rows) < self.max_records:
+            share = max(1, (self.max_records - len(rows)) // len(active))
+            behind = []
+            for shard_id in active:
+                want = min(share, self.max_records - len(rows))
+                if not want:
+                    break
+                got = self._read_shard(client, shard_id, end[shard_id], want)
+                if got is None:
+                    del end[shard_id]  # retired
+                    continue
+                rows.extend(got)
+                if got:
+                    end[shard_id] = got[-1][2]  # last-read sequence number
+                if len(got) == want:
+                    behind.append(shard_id)
+            active = behind
         return iter(rows), end
+
+    def _read_shard(self, client, shard_id: str, pos: str, n: int):
+        """Up to ``n`` records of one shard after ``pos``, or None when
+        the shard has been retired."""
+        try:
+            return list(
+                read_shard(client, self.stream, shard_id, pos, max_records=n)
+            )
+        except Exception as exc:  # noqa: BLE001 — boto3 client error
+            # A resharded-away shard that has aged past retention
+            # vanishes from the stream; keeping it in the offset map
+            # would fail THIS and every retried batch forever. Retire
+            # it — but only on the SPECIFIC AWS error code, and only
+            # after confirming the shard (not the whole stream) is what
+            # vanished: a stream-level ResourceNotFound (stream
+            # deleted/renamed mid-run) must surface, not silently retire
+            # every shard and read empty batches forever (ADVICE r7).
+            code = (
+                getattr(exc, "response", None) or {}
+            ).get("Error", {}).get("Code", "")
+            if code != "ResourceNotFoundException":
+                raise
+            live = list_shard_ids(client, self.stream)  # raises if
+            # the stream itself is gone — the failure we must keep
+            if shard_id in live:
+                raise  # shard exists; the error was about the
+                # stream/iterator state, not shard retirement
+            _LOG.warning(
+                "kinesis shard %s/%s vanished (aged past "
+                "retention after reshard); retiring its offset",
+                self.stream,
+                shard_id,
+            )
+            return None
 
     def readBetweenOffsets(self, start: dict, end: dict):
         client = self.factory()

@@ -23,12 +23,22 @@ state per user — state is O(active sessions), not O(events).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from frinesis_spark.catalog import table
 from frinesis_spark.functions.numeric import dsum, oracle_dsum
-from frinesis_spark.streaming.runner import events_stream, run_append_to_files
+from frinesis_spark.streaming.runner import (
+    events_stream,
+    replay,
+    run_append_to_files,
+    run_to_completion,
+    set_mtimes_in_order,
+    stage,
+    track_output_dir,
+)
 
 _WATERMARK = "10 minutes"
 _SESSION_GAP = "30 minutes"
@@ -133,58 +143,6 @@ def q_stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_append_to_files(agg)
 
 
-def _stage_events_split(spark: SparkSession, sf_dir: str, n: int) -> str:
-    """Versioned multi-file staging of the events table, TIME-RANGE
-    split into ``n`` parquet files with mtimes in range order — the
-    multi-micro-batch replay source for
-    :func:`q_stream_incremental_batches`.
-
-    Range split (repartitionByRange on ts), not hash: each file's
-    rows are no older than every earlier file's, so oldest-first
-    file-source processing (the default) advances the watermark
-    MONOTONICALLY across micro-batches and no in-order row is ever
-    dropped as late — the emitted-window set stays exactly the
-    final-watermark contract the oracle computes. mtimes are bumped
-    in range order because FileStreamSource picks files oldest-first
-    by modification time. Versioned by corpus fingerprint like
-    runner._stage_dir (immutable once built; keep-two-generations
-    would apply if fixtures ever regenerated mid-process — this
-    staging is test/fixture plumbing, the production source is a real
-    stream)."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from frinesis_spark.caches import corpus_fingerprint
-    from frinesis_spark.catalog import table as _table
-
-    fp = corpus_fingerprint(sf_dir, "events")
-    stage = os.path.join(
-        tempfile.gettempdir(), f"fs_split_{fp}_{n}"
-    )
-    if os.path.exists(stage):
-        return stage
-    tmp = f"{stage}.tmp_{os.getpid()}_{uuid.uuid4().hex[:6]}"
-    (
-        _table(spark, sf_dir, "events")
-        .repartitionByRange(n, "ts")
-        .write.mode("overwrite")
-        .parquet(tmp)
-    )
-    parts = sorted(
-        f for f in os.listdir(tmp) if f.endswith(".parquet")
-    )
-    base = 1_000_000_000  # fixed epoch secs: deterministic ordering
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(tmp, f), (base + i, base + i))
-    try:
-        os.rename(tmp, stage)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost a concurrent race
-    return stage
-
-
 def q_stream_incremental_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL multi-micro-batch streaming: the same watermarked hourly
     rollup as ``stream_watermark_late``, but replayed as FOUR
@@ -204,14 +162,7 @@ def q_stream_incremental_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     after micro-batch against the same state store; the single-batch
     replays everywhere else are the degenerate first-batch case.
     """
-    stage = _stage_events_split(spark, sf_dir, 4)
-    schema = spark.read.parquet(stage).schema
-    ev = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
+    ev = events_stream(spark, sf_dir, files=4)
     agg = (
         ev.withWatermark("ts", _WATERMARK)
         .groupBy(F.window("ts", "1 hour"), "event_type")
@@ -292,9 +243,10 @@ _REPLAY_MOD = 100
 _REPLAY_BUCKET = "7 days"  # replay shift > 2x bucket width
 
 
-def _stage_events_dedup_replay(spark: SparkSession, sf_dir: str) -> str:
-    """Stage events ∪ planted replays into fixed 7-day time-bucket
-    files (mtime in bucket order, one file per micro-batch).
+def _write_dedup_replay(spark: SparkSession, sf_dir: str, out: str) -> None:
+    """Replay layout for :func:`runner.stage`: events ∪ planted replays
+    in fixed 7-day time-bucket files (mtime in bucket order, one file
+    per micro-batch).
 
     FIXED time width, not ``repartitionByRange``: count-balanced
     ranges would stretch over the sparse +8d tail (only 1% of rows
@@ -303,17 +255,8 @@ def _stage_events_dedup_replay(spark: SparkSession, sf_dir: str) -> str:
     exact case the bucket-width < shift invariant forbids."""
     import os
     import shutil
-    import tempfile
-    import uuid
 
-    from frinesis_spark.caches import corpus_fingerprint
-    from frinesis_spark.catalog import table as _table
-
-    fp = corpus_fingerprint(sf_dir, "events")
-    stage = os.path.join(tempfile.gettempdir(), f"fs_dedup_replay_v2_{fp}")
-    if os.path.exists(stage):
-        return stage
-    ev = _table(spark, sf_dir, "events").select("event_id", "ts")
+    ev = table(spark, sf_dir, "events").select("event_id", "ts")
     rep_in = ev.where(F.col("event_id") % _REPLAY_MOD == 0).withColumn(
         "ts", F.col("ts") + F.expr("INTERVAL 2 MINUTES")
     )
@@ -334,7 +277,7 @@ def _stage_events_dedup_replay(spark: SparkSession, sf_dir: str) -> str:
     ).first()
     if n_null_ts:
         raise ValueError(
-            f"_stage_events_dedup_replay: {n_null_ts} NULL-ts events "
+            f"dedup replay staging: {n_null_ts} NULL-ts events "
             "would be silently dropped by time-bucketing and the "
             "downstream watermark; filter or impute ts upstream"
         )
@@ -347,11 +290,9 @@ def _stage_events_dedup_replay(spark: SparkSession, sf_dir: str) -> str:
         ).cast("long"),
     )
     n_buckets = bucketed.agg(F.max("_bkt")).first()[0] + 1
-    tmp = f"{stage}.tmp_{os.getpid()}_{uuid.uuid4().hex[:6]}"
-    os.makedirs(tmp)
-    base = 1_000_000_000  # fixed epoch secs: deterministic ordering
+    files = []
     for k in range(int(n_buckets)):
-        sub = os.path.join(tmp, f"_w{k}")
+        sub = os.path.join(out, f"_w{k}")
         (
             bucketed.where(F.col("_bkt") == k)
             .drop("_bkt")
@@ -360,15 +301,15 @@ def _stage_events_dedup_replay(spark: SparkSession, sf_dir: str) -> str:
             .parquet(sub)
         )
         (part,) = [f for f in os.listdir(sub) if f.endswith(".parquet")]
-        dst = os.path.join(tmp, f"bucket_{k:03d}.parquet")
-        os.rename(os.path.join(sub, part), dst)
+        files.append(os.path.join(out, f"bucket_{k:03d}.parquet"))
+        os.rename(os.path.join(sub, part), files[-1])
         shutil.rmtree(sub, ignore_errors=True)
-        os.utime(dst, (base + k, base + k))
-    try:
-        os.rename(tmp, stage)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost a concurrent race
-    return stage
+    set_mtimes_in_order(files)
+
+
+def dedup_replay_stage(spark: SparkSession, sf_dir: str) -> str:
+    """Staged directory of :func:`_write_dedup_replay`'s layout."""
+    return stage(sf_dir, "dedup_replay", partial(_write_dedup_replay, spark, sf_dir))
 
 
 def q_stream_dedup_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -387,14 +328,7 @@ def q_stream_dedup_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``events UNION ALL (events WHERE id % mod = 1)``. The state-stays-
     flat-vs-exact differential is pinned in
     tests/test_round12_fixes.py."""
-    stage = _stage_events_dedup_replay(spark, sf_dir)
-    schema = spark.read.parquet(stage).schema
-    ev = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
+    ev = replay(spark, dedup_replay_stage(spark, sf_dir))
     deduped = (
         ev.withWatermark("ts", _WATERMARK)
         .dropDuplicatesWithinWatermark(["event_id"])
@@ -660,11 +594,8 @@ def q_stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle.
     """
     import os
-    import shutil
     import tempfile
     import uuid
-
-    from frinesis_spark.streaming.runner import track_output_dir
 
     ev = events_stream(spark, sf_dir).select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -677,19 +608,7 @@ def q_stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     store = _BucketedSnapshotStore(
         base, "user_id", [F.col("ts").desc(), F.col("event_id").desc()]
     )
-
-    ckpt = tempfile.mkdtemp(prefix="fs_ckpt_")
-    query = (
-        ev.writeStream.foreachBatch(store.merge)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        query.processAllAvailable()
-        query.processAllAvailable()
-    finally:
-        query.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
+    run_to_completion(ev.writeStream.foreachBatch(store.merge), spark)
     if not store.manifest:
         # A zero-row events table is a legal input (batches fired but
         # carried no rows): the upsert state is simply empty — return

@@ -318,6 +318,89 @@ def test_stream_reader_caps_each_batch_at_max_records(tmp_path):
     ]
 
 
+class _ShardedClient:
+    """Fake multi-shard stream: ``logs`` maps shard id → payloads. A
+    record's sequence number is its index in its shard, and
+    GetRecords honours ``Limit``."""
+
+    def __init__(self, logs):
+        self.logs = logs
+
+    def list_shards(self, **kw):
+        return {"Shards": [{"ShardId": s} for s in self.logs]}
+
+    def get_shard_iterator(self, ShardId, ShardIteratorType, **kw):  # noqa: N803
+        pos = 0
+        if ShardIteratorType == "AFTER_SEQUENCE_NUMBER":
+            pos = int(kw["StartingSequenceNumber"]) + 1
+        return {"ShardIterator": f"{ShardId}|{pos}"}
+
+    def get_records(self, ShardIterator, Limit):  # noqa: N803
+        sid, pos = ShardIterator.rsplit("|", 1)
+        pos = int(pos)
+        chunk = self.logs[sid][pos : pos + Limit]
+        return {
+            "Records": [
+                {"SequenceNumber": str(pos + i), "PartitionKey": "pk", "Data": d}
+                for i, d in enumerate(chunk)
+            ],
+            "NextShardIterator": f"{sid}|{pos + len(chunk)}",
+            "MillisBehindLatest": 0,
+        }
+
+
+def _budget_reader(logs, budget):
+    from frinesis_spark.sources.kinesis_datasource import (
+        KinesisSimpleStreamReader,
+    )
+
+    r = KinesisSimpleStreamReader(
+        {"stream": "s", "mock_store_dir": "/x", "maxrecordsperbatch": str(budget)}
+    )
+    r.factory = lambda: _ShardedClient(logs)
+    return r
+
+
+def test_stream_reader_budget_holds_across_many_shards():
+    """More shards than budget: 10 shards of 3 records each and
+    ``maxRecordsPerBatch=4`` read exactly 4 rows, and the replay of the
+    batch's offsets returns exactly those rows."""
+    logs = {
+        f"shard-{k}": [f"s{k}r{i}".encode() for i in range(3)] for k in range(10)
+    }
+    reader = _budget_reader(logs, 4)
+    start = reader.initialOffset()
+    rows, end = reader.read(start)
+    rows = list(rows)
+    assert len(rows) == 4
+    assert sorted(reader.readBetweenOffsets(start, end)) == sorted(rows)
+    # The shard order rotates per batch, so no shard waits for the
+    # first four to drain; every record is read exactly once.
+    batches = [rows]
+    while rows:
+        rows, end = reader.read(end)
+        rows = list(rows)
+        batches.append(rows)
+    assert len({r[1] for b in batches[:3] for r in b}) > 4
+    got = [bytes(r[4]) for b in batches for r in b]
+    assert sorted(got) == sorted(d for log in logs.values() for d in log)
+
+
+def test_stream_reader_budget_moves_to_backlogged_shard():
+    """Budget a caught-up shard leaves unused goes to the shard that
+    still holds records, in the same batch: one backlogged shard (not
+    the first) among nine idle ones gets the whole budget."""
+    logs = {f"shard-{k}": [] for k in range(10)}
+    logs["shard-3"] = [f"r{i}".encode() for i in range(10)]
+    reader = _budget_reader(logs, 4)
+    start = reader.initialOffset()
+    rows, end = reader.read(start)
+    rows = list(rows)
+    assert [bytes(r[4]) for r in rows] == [b"r0", b"r1", b"r2", b"r3"]
+    assert {r[1] for r in rows} == {"shard-3"}
+    assert sorted(reader.readBetweenOffsets(start, end)) == sorted(rows)
+
+
 # --- shard retirement specificity (ADVICE r7) ------------------------------
 
 

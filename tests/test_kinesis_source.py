@@ -39,6 +39,43 @@ def test_drain_shard_pages_through(tmp_path):
     )
 
 
+def test_mock_pages_decode_each_store_file_once(tmp_path, monkeypatch):
+    """Paging a 2,000-record stream at ``Limit=100`` decodes each mock
+    store file exactly once (the store used to be re-read and decoded
+    on every GetRecords, quadratic in the stream length), and the rows
+    are the stored log in order."""
+    from collections import Counter
+
+    from frinesis_spark.sinks import mock
+
+    store = str(tmp_path / "store")
+    writer = MockKinesisClient(store_dir=store)
+    for call in range(20):
+        writer.put_records(
+            Records=[
+                {"Data": f"m{call * 100 + i}".encode(), "PartitionKey": "k"}
+                for i in range(100)
+            ],
+            StreamName="s1",
+        )
+    want = [r["data"] for r in mock.read_back(store)]
+    assert len(want) == 2000
+
+    decoded = Counter()
+    read_file = mock._read_file
+
+    def counting(path):
+        decoded[path] += 1
+        return read_file(path)
+
+    monkeypatch.setattr(mock, "_read_file", counting)
+    client = MockKinesisClient(store_dir=store)
+    [shard] = list_shard_ids(client, "s1")
+    recs = list(read_shard(client, "s1", shard, limit=100))
+    assert [r[4] for r in recs] == want
+    assert len(decoded) == 20 and set(decoded.values()) == {1}
+
+
 def test_read_kinesis_empty_stream(spark, tmp_path):
     factory = MockClientFactory(store_dir=str(tmp_path / "store"))
     df = read_kinesis(spark, factory, "nothing-here")

@@ -251,17 +251,10 @@ class TestStreamDedupBounded:
     production dedup, verified — not described."""
 
     def _run_with_progress(self, spark, stage, bounded: bool, tmp_path):
-        from pyspark.sql import functions as F
-
+        from frinesis_spark.streaming.runner import replay
         from frinesis_spark.streaming.windows import _WATERMARK
 
-        schema = spark.read.parquet(stage).schema
-        ev = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-        )
+        ev = replay(spark, stage)
         if bounded:
             ded = ev.withWatermark(
                 "ts", _WATERMARK
@@ -294,10 +287,10 @@ class TestStreamDedupBounded:
     def test_state_stays_flat_vs_exact(self, spark, sf_dir, tmp_path):
         from frinesis_spark.streaming.windows import (
             _REPLAY_MOD,
-            _stage_events_dedup_replay,
+            dedup_replay_stage,
         )
 
-        stage = _stage_events_dedup_replay(spark, sf_dir)
+        stage = dedup_replay_stage(spark, sf_dir)
         b_state, b_emit = self._run_with_progress(
             spark, stage, True, tmp_path
         )

@@ -330,9 +330,7 @@ class TestNullTsStaging:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from frinesis_spark.streaming.windows import (
-            _stage_events_dedup_replay,
-        )
+        from frinesis_spark.streaming.windows import dedup_replay_stage
 
         out = tmp_path / "nullts"
         out.mkdir()
@@ -349,7 +347,7 @@ class TestNullTsStaging:
             str(out / "events.parquet"),
         )
         with pytest.raises(ValueError, match="NULL-ts"):
-            _stage_events_dedup_replay(spark, str(out))
+            dedup_replay_stage(spark, str(out))
 
 
 class TestPngPalette:

@@ -537,15 +537,23 @@ def test_ivf_probes_clamp_on_tiny_corpus(spark, monkeypatch):
         sim._IVF_INDEX_CACHE.clear()
 
 
-def test_stage_dir_prunes_old_versions(spark, tmp_path):
-    """A regenerated fixture mints a fresh v_<sig> staging dir; older
-    versions beyond the newest two must be reclaimed (previously every
-    regeneration leaked a full staged copy under /tmp forever)."""
+def _stage_layout(spark, sf_dir, layout):
+    from frinesis_spark.streaming import runner, windows
+
+    if layout == "dedup_replay":
+        return windows.dedup_replay_stage(spark, sf_dir)
+    return runner.events_stage(spark, sf_dir, int(layout[len("files"):]))
+
+
+@pytest.mark.parametrize("layout", ["files1", "files4", "dedup_replay"])
+def test_stage_dir_prunes_old_versions(spark, tmp_path, layout):
+    """A regenerated fixture mints a fresh version of every replay
+    staging layout; versions beyond the newest two must be reclaimed
+    (an unpruned layout leaks a full staged copy under /tmp on every
+    regeneration)."""
     import os
     import shutil
     import time
-
-    from frinesis_spark.streaming import runner
 
     sf_like = tmp_path / "sf"
     sf_like.mkdir()
@@ -571,19 +579,20 @@ def test_stage_dir_prunes_old_versions(spark, tmp_path):
         )
 
     vdirs = []
-    for gen in (3, 4, 5, 6):
+    for gen in (5, 6, 7, 8):
         write_fixture(gen)
-        # mtime_ns must differ between generations for a fresh sig
+        # mtime_ns must differ between generations for a fresh version
         os.utime(
             sf_like / "events.parquet",
             ns=(time.time_ns(), time.time_ns() + gen),
         )
-        vdirs.append(runner._stage_dir(str(sf_like), "events"))
+        vdirs.append(_stage_layout(spark, str(sf_like), layout))
     stage_root = os.path.dirname(vdirs[-1])
     live = [d for d in os.listdir(stage_root) if d.startswith("v_")]
-    assert len(set(vdirs)) == 4  # four distinct signatures staged
+    assert len(set(vdirs)) == 4  # four distinct fingerprints staged
     assert len(live) == 2  # keep-two-generations retention
     assert os.path.basename(vdirs[-1]) in live
+    assert os.path.basename(vdirs[-2]) in live
 
 
 def test_event_log_stats_exact_past_retention():
@@ -821,8 +830,9 @@ def test_incremental_batches_really_multi_batch(spark, sf_dir):
 
     from frinesis_spark.streaming import windows as w_mod
     from frinesis_spark.streaming.observability import EngineEventLog
+    from frinesis_spark.streaming.runner import events_stage
 
-    stage = w_mod._stage_events_split(spark, sf_dir, 4)
+    stage = events_stage(spark, sf_dir, 4)
     parts = [f for f in os.listdir(stage) if f.endswith(".parquet")]
     assert len(parts) == 4
     mts = sorted(os.path.getmtime(os.path.join(stage, f)) for f in parts)

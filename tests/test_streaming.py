@@ -370,3 +370,44 @@ def test_state_partition_count_never_changes_answers(
     b = run(13)
     assert a == b
     assert len(a) > 0
+
+
+@pytest.mark.parametrize("layout", ["nanos", "parts"])
+def test_watermark_late_matches_across_fixture_layouts(spark, sf_dir, tmp_path, layout):
+    """The stream path reads any events fixture the catalog reads: the
+    same rows with ``ts`` written as parquet TIMESTAMP(NANOS)
+    (``nanos``, the reader's ns branch), or split into a directory of
+    three part files (``parts``, still replayed as ONE micro-batch, so
+    no row arrives behind the watermark), give the same
+    stream_watermark_late rows as the one-file µs fixture."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from frinesis_spark.catalog import events_ts_unit
+    from frinesis_spark.streaming.windows import q_stream_watermark_late
+
+    ev = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    out = tmp_path / "sf"
+    out.mkdir()
+    if layout == "nanos":
+        i = ev.schema.get_field_index("ts")
+        ev = ev.set_column(i, "ts", ev.column("ts").cast(pa.timestamp("ns")))
+        pq.write_table(ev, str(out / "events.parquet"), version="2.6")
+        assert events_ts_unit(str(out / "events.parquet")) == "ns"
+    else:
+        (out / "events.parquet").mkdir()
+        step = -(-ev.num_rows // 3)
+        for k in range(3):
+            pq.write_table(
+                ev.slice(k * step, step),
+                str(out / "events.parquet" / f"part-{k}.parquet"),
+            )
+
+    want = sorted(tuple(r) for r in q_stream_watermark_late(spark, sf_dir).collect())
+    try:
+        got = sorted(
+            tuple(r) for r in q_stream_watermark_late(spark, str(out)).collect()
+        )
+    finally:
+        spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    assert want and got == want
