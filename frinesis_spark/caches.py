@@ -1,18 +1,44 @@
-"""Central reset for the per-(session, corpus) derived-artifact caches.
+"""The derived-artifact cache: one memo for every per-corpus artifact.
 
 The dedup/similarity operators build derived artifacts once per
-(session, corpus) — shingle inverted index, per-doc shingle sizes,
-minhash signatures, simhash fingerprints, LSH bucket table, IVF
-centroids+cells — and serve repeat queries from those caches (the
-persisted-index pattern; see SCALE.md). That makes any steady-state
-timing a WARM measurement. This helper drops every such cache so a
-caller (bench.py's cold reps, tests) can measure or re-exercise the
-index-build path from scratch.
+(session, corpus) and serve repeat queries from them (the
+persisted-index pattern; see SCALE.md). Every such artifact is
+resolved by :func:`artifact`, the one memo:
+
+- documents-keyed: ``shingle_index`` (DF-capped inverted index),
+  ``shingle_sizes`` (per-doc shingle counts), ``minhash_signatures``,
+  ``simhash_fingerprints``, ``simhash_floor`` (the recall-floor int);
+- embeddings-keyed: ``ivf_index`` ((cells DataFrame, centroids
+  ndarray)), ``lsh_index`` (corpus bucket table), ``emb_membership``
+  (the multi-assignment table).
+
+The key is ``(session_key, sf_dir, fingerprint)`` and each artifact
+name holds at most 4 entries, least recently used evicted first. With
+``SPARK_GRAFT_INDEX_STORE`` set (store mode) the fingerprint is the
+source table's :func:`corpus_fingerprint`, and the artifacts in
+``STORED`` persist as parquet under
+``$SPARK_GRAFT_INDEX_STORE/<name>/fp=<fingerprint>/``; the others stay
+session-local. With it unset the fingerprint slot is "" (fixtures are
+immutable within a run).
+
+Any steady-state timing is therefore a WARM measurement;
+:func:`clear_derived_caches` drops every entry so a caller (bench.py's
+cold reps, perfbench's cold half, tests) can measure or re-exercise
+the build path from scratch.
 """
 
 from __future__ import annotations
 
 import os
+
+# The artifacts that persist in store mode; every other artifact is
+# memo-only in both modes.
+STORED = frozenset({"shingle_index", "shingle_sizes"})
+_HELD = 4  # entries held per artifact name
+
+# name -> {(session_key, sf_dir, fingerprint): value}, insertion-ordered
+# with hits moved to the end, so the front entry is the LRU one.
+_MEMO: dict[str, dict[tuple, object]] = {}
 
 
 def corpus_fingerprint(sf_dir: str, table: str = "documents") -> str:
@@ -39,92 +65,90 @@ def corpus_fingerprint(sf_dir: str, table: str = "documents") -> str:
     return h.hexdigest()[:16]
 
 
-def cached(cache: dict, spark, sf_dir: str, build, table: str = "documents"):
-    """Per-(session, corpus dir, corpus fingerprint) memo for derived
-    artifacts, bounded at 4 held entries per cache (the clear keeps
-    session memory flat across many corpora). The fingerprint slot is
-    "" when SPARK_GRAFT_INDEX_STORE is off (immutable-fixture
-    assumption); in store mode it makes a mid-session refresh of the
-    SOURCE TABLE visible to every artifact — persisted or
-    session-local — so two queries in one session can never answer
-    about different corpora. ONE definition of the pattern
-    (dedup/similarity both route through here): eviction-policy or
-    key-scheme fixes land in this function, not in per-module copies.
-    Note the store-mode build path (_store_load_or_build) re-computes
-    the fingerprint for its directory name — a cheap footer-stat
-    sweep; a corpus refresh landing in that microsecond window would
-    memo a new-corpus artifact under the old key for the session's
-    remainder, an accepted race (the driver's fixtures are immutable
-    within a run).
+def artifact(
+    spark, sf_dir: str, name: str, build, table: str = "documents",
+    checkpoint: bool = False,
+):
+    """The derived artifact ``name`` of ``sf_dir``'s ``table``, built
+    by ``build()`` on a miss.
+
+    ``checkpoint=True`` materializes a DataFrame build with an eager
+    localCheckpoint, except when store mode writes it: the parquet
+    write is then the materialization, and a checkpoint as well would
+    run one redundant job per miss. In store mode the fingerprint is
+    computed once per lookup and serves both the memo key and the
+    store directory, so the two can never name different corpora.
     """
     from frinesis_spark.catalog import session_key
 
     store = os.environ.get("SPARK_GRAFT_INDEX_STORE")
     fp = corpus_fingerprint(sf_dir, table) if store else ""
+    memo = _MEMO.setdefault(name, {})
     key = (session_key(spark), sf_dir, fp)
-    val = cache.get(key)
-    if val is None:
-        if len(cache) >= 4:
-            # Evict the LEAST-RECENTLY-USED entry, not the whole
-            # cache: a session alternating over ≥5 corpora previously
-            # degraded to a 0% hit rate — every lookup wiped the 4 hot
-            # entries and rebuilt a full index per call (review wave
-            # 6). Same 4-entry memory bound, insertion-ordered dict
-            # with hits refreshed to the end (below), so the front IS
-            # the LRU entry (ADVICE r8: pure insertion order evicted a
-            # first-inserted-but-hottest artifact).
-            del cache[next(iter(cache))]
-        val = build()
-        cache[key] = val
+    if key in memo:
+        memo[key] = val = memo.pop(key)  # refresh recency on a hit
+        return val
+    if store and name in STORED:
+        val = _load_or_write(spark, os.path.join(store, name), fp, build)
     else:
-        # Refresh recency on hit so eviction is LRU, not FIFO.
-        cache[key] = cache.pop(key)
+        val = build()
+        if checkpoint:
+            val = val.localCheckpoint(eager=True)
+    memo[key] = val
+    if len(memo) > _HELD:
+        # LRU, not a wipe: a session alternating over 5 corpora kept a
+        # 0% hit rate when a full cache was cleared per miss.
+        del memo[next(iter(memo))]
     return val
 
 
-def clear_derived_caches(unpersist: bool = True) -> int:
-    """Drop all derived-artifact caches; returns #entries dropped.
+def _load_or_write(spark, base: str, fp: str, build):
+    """Store mode: a fingerprint hit is a plain parquet scan (zero
+    recompute, survives session restarts); a miss builds once, writes,
+    and reclaims all but the newest superseded fingerprint directory.
+    Keeping one generation back matters for correctness: store-mode
+    frames are LAZY parquet scans, so a caller holding a frame built
+    before a corpus refresh still reads the previous fingerprint's
+    files mid-job."""
+    import glob
+    import shutil
 
-    Block reclamation: most cached values are ``localCheckpoint``-backed
+    path = os.path.join(base, f"fp={fp}")
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        build().write.mode("overwrite").parquet(path)
+        superseded = sorted(
+            (d for d in glob.glob(os.path.join(base, "fp=*")) if d != path),
+            key=os.path.getmtime,
+            reverse=True,
+        )
+        for d in superseded[1:]:
+            shutil.rmtree(d, ignore_errors=True)
+    return spark.read.parquet(path)
+
+
+def clear_derived_caches() -> int:
+    """Drop every derived artifact; returns the number of entries
+    dropped.
+
+    Block reclamation: most values are ``localCheckpoint``-backed
     DataFrames, whose blocks ``Dataset.unpersist()`` does NOT release
-    (it only uncaches ``persist()``/``cache()`` state tracked by the
-    CacheManager — a checkpointed RDD's persist lives outside it). The
-    actual release path is dropping the LAST reference here: clearing
-    the dicts frees the Python handle → py4j GC releases the JVM
-    Dataset → the checkpointed RDD becomes unreachable → Spark's
-    ContextCleaner unpersists its blocks asynchronously. The
-    ``unpersist`` flag still covers any plain ``persist()``-cached
-    values and is harmless elsewhere (r6 review fix: the old comment
-    credited ``unpersist()`` with the release it doesn't perform).
+    (it only uncaches ``persist()``/``cache()`` state). Dropping the
+    LAST reference here is the release path: the Python handle goes,
+    py4j GC releases the JVM Dataset, and Spark's ContextCleaner
+    unpersists the unreachable checkpointed RDD's blocks
+    asynchronously. ``unpersist()`` still covers any plain
+    ``persist()``-cached value.
     """
-    from frinesis_spark.operators import dedup, similarity
-
-    dicts = [
-        dedup._INDEX_CACHE,
-        dedup._SIG_CACHE,
-        dedup._SIZES_CACHE,
-        dedup._SIMHASH_CACHE,
-        dedup._SIMHASH_FLOOR_CACHE,
-        dedup._EMB_MEMBERSHIP_CACHE,
-        similarity._LSH_INDEX_CACHE,
-        similarity._IVF_INDEX_CACHE,
-    ]
     dropped = 0
-    for d in dicts:
-        for value in d.values():
-            dropped += 1
-            if not unpersist:
-                continue
-            # Values are DataFrames, or tuples containing one (IVF's
-            # (cells DataFrame, centroids ndarray)). unpersist() is a
-            # no-op on never-persisted AND localCheckpointed frames
-            # (see docstring — those free via d.clear() + GC below).
-            frames = value if isinstance(value, tuple) else (value,)
-            for f in frames:
+    for memo in _MEMO.values():
+        dropped += len(memo)
+        for value in memo.values():
+            # A DataFrame, an int, or a tuple holding one (ivf_index).
+            for f in value if isinstance(value, tuple) else (value,):
                 if hasattr(f, "unpersist"):
                     try:
                         f.unpersist()
                     except Exception:
                         pass  # session already stopped — nothing to free
-        d.clear()
+        memo.clear()
     return dropped

@@ -21,11 +21,10 @@ scale path.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from frinesis_spark.caches import artifact
 from frinesis_spark.catalog import spread, table
 
 # MinHash parameters: 128-long signature, 32 bands × 4 rows.
@@ -131,107 +130,18 @@ def _shingle_index(docs: DataFrame, max_df: int = _MAX_DF) -> DataFrame:
     return inv.join(stop, "shingle", "left_anti").localCheckpoint(eager=True)
 
 
-# Corpus-statistics cache: the DF-capped shingle index is a pure
-# function of an immutable fixture directory, and it feeds ngram
-# Jaccard, its repeat invocations, AND connected-components (which
-# consumes the Jaccard pairs) — so it is computed once per
-# (session, corpus dir) and the checkpointed entries are reused, the
-# same pattern as catalog.register_views's per-(session, dir) cache.
-# This is the "materialize the staging table once" design the scale
-# notes call for: at 100 TB the index is a persisted table, not a
-# per-query recomputation. Holding the DataFrame keeps its
-# checkpointed RDD blocks alive for the session.
-_INDEX_CACHE: dict[tuple, DataFrame] = {}
-_SIG_CACHE: dict[tuple, DataFrame] = {}
-_SIZES_CACHE: dict[tuple, DataFrame] = {}
-_SIMHASH_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _corpus_fingerprint(sf_dir: str) -> str:
-    """Documents-table identity — see :func:`caches.corpus_fingerprint`
-    (shared with similarity's embeddings-keyed caches)."""
-    from frinesis_spark.caches import corpus_fingerprint
-
-    return corpus_fingerprint(sf_dir, "documents")
-
-
-def _store_load_or_build(
-    spark: SparkSession, sf_dir: str, artifact: str, build, localize=False
-) -> DataFrame:
-    """Resolve a derived corpus artifact, persisted-table mode aware.
-
-    With ``SPARK_GRAFT_INDEX_STORE`` unset (the default), just builds —
-    the session-local checkpoint cache above is the only reuse layer.
-    With it set (the production shape SCALE.md describes: the index is
-    a persisted table refreshed with the corpus, not a per-session
-    recomputation), artifacts live under
-    ``$SPARK_GRAFT_INDEX_STORE/<artifact>/fp=<corpus fingerprint>/``:
-    a fingerprint hit is a plain parquet scan (zero recompute, survives
-    session restarts), a miss builds once, writes, and reclaims all
-    but the most recently superseded fingerprint directory. Keeping
-    one generation back matters for correctness, not just time
-    travel: store-mode frames are LAZY parquet scans, so a caller
-    holding a DataFrame built before a corpus refresh still reads the
-    previous fingerprint's files — deleting them immediately would
-    fail that caller's next action mid-job. (A real deployment with
-    time-travel needs would keep N generations.)
-
-    Returns the frame (callers never used the old fingerprint tuple
-    member — caches.cached owns the fingerprint for the in-memory
-    key; review wave 5 dropped the dead return and its duplicate
-    fingerprint pass). ``localize=True`` applies an eager
-    localCheckpoint ONLY on the no-store path: in store mode the
-    parquet write IS the materialization, and a checkpoint inside the
-    build lambda ran one full redundant job per cache miss (review
-    wave 5).
-    """
-    store = os.environ.get("SPARK_GRAFT_INDEX_STORE")
-    if not store:
-        built = build()
-        return built.localCheckpoint(eager=True) if localize else built
-    import glob
-    import shutil
-
-    fp = _corpus_fingerprint(sf_dir)
-    base = os.path.join(store, artifact)
-    path = os.path.join(base, f"fp={fp}")
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return spark.read.parquet(path)
-    df = build()
-    df.write.mode("overwrite").parquet(path)
-    superseded = sorted(
-        (
-            d
-            for d in glob.glob(os.path.join(base, "fp=*"))
-            if os.path.basename(d) != f"fp={fp}"
-        ),
-        key=os.path.getmtime,
-        reverse=True,
-    )
-    for d in superseded[1:]:  # keep the newest superseded generation
-        shutil.rmtree(d, ignore_errors=True)
-    return spark.read.parquet(path)
-
-
-def _cached(cache: dict, spark: SparkSession, sf_dir: str, build) -> DataFrame:
-    """Documents-keyed artifact memo — the shared
-    :func:`caches.cached` with this module's source table."""
-    from frinesis_spark.caches import cached
-
-    return cached(cache, spark, sf_dir, build, table="documents")
-
-
 def _cached_shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _cached(
-        _INDEX_CACHE,
+    """The DF-capped shingle index as a derived artifact: a pure
+    function of the corpus that feeds ngram Jaccard, its repeat
+    invocations AND connected-components, so it is built once per
+    (session, corpus) — at 100 TB a persisted table, which store mode
+    implements (see :func:`caches.artifact`). ``_shingle_index``
+    materializes itself, so no checkpoint here."""
+    return artifact(
         spark,
         sf_dir,
-        lambda: _store_load_or_build(
-            spark,
-            sf_dir,
-            "shingle_index",
-            lambda: _shingle_index(table(spark, sf_dir, "documents")),
-        ),
+        "shingle_index",
+        lambda: _shingle_index(table(spark, sf_dir, "documents")),
     )
 
 
@@ -347,13 +257,12 @@ def _cached_simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     immutable corpus dir, so repeat invocations reuse the checkpointed
     table instead of re-running the text→hash→vote pass (at real scale
     a persisted fingerprint column/table)."""
-    return _cached(
-        _SIMHASH_CACHE,
+    return artifact(
         spark,
         sf_dir,
-        lambda: _simhash_fingerprints(
-            table(spark, sf_dir, "documents")
-        ).localCheckpoint(eager=True),
+        "simhash_fingerprints",
+        lambda: _simhash_fingerprints(table(spark, sf_dir, "documents")),
+        checkpoint=True,
     )
 
 
@@ -366,21 +275,16 @@ def _cached_shingle_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (KBs even at 100 TB scale ÷ 10⁹ docs → a broadcastable dim), so
     the eager localCheckpoint is cheap and the downstream joins
     broadcast it instead of shuffling the candidate pairs."""
-    return _cached(
-        _SIZES_CACHE,
+    return artifact(
         spark,
         sf_dir,
-        lambda: _store_load_or_build(
-            spark,
-            sf_dir,
-            "shingle_sizes",
-            lambda: (
-                _cached_shingle_index(spark, sf_dir)
-                .groupBy("doc_id")
-                .agg(F.count(F.lit(1)).alias("n_sh"))
-            ),
-            localize=True,
+        "shingle_sizes",
+        lambda: (
+            _cached_shingle_index(spark, sf_dir)
+            .groupBy("doc_id")
+            .agg(F.count(F.lit(1)).alias("n_sh"))
         ),
+        checkpoint=True,
     )
 
 
@@ -576,17 +480,15 @@ def near_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # text), so this is the layer you materialize once. Eager
     # localCheckpoint beats lazy persist here: concurrent downstream
     # stages would all race-compute a cold cache. In a real pipeline
-    # checkpoint signatures to a table instead — locally they live in
-    # the same per-(session, corpus) statistics cache as the shingle
-    # index (see _INDEX_CACHE): a pure function of an immutable
-    # fixture dir, shared across repeat invocations.
-    sig = _cached(
-        _SIG_CACHE,
+    # checkpoint signatures to a table instead — locally they are a
+    # derived artifact like the shingle index (caches.artifact): a
+    # pure function of the corpus, shared across repeat invocations.
+    sig = artifact(
         spark,
         sf_dir,
-        lambda: _minhash_signatures(
-            table(spark, sf_dir, "documents")
-        ).localCheckpoint(eager=True),
+        "minhash_signatures",
+        lambda: _minhash_signatures(table(spark, sf_dir, "documents")),
+        checkpoint=True,
     )
 
     # Compact band expression: hash(slice(sig)) per band instead of a
@@ -741,14 +643,6 @@ _SIMHASH_RECALL_FLOOR_OPEN_PCT = 55
 _VOCAB_FAMILY_THRESHOLD = 500
 
 
-# Family-floor memo (r16): the vocab probe is a full corpus scan +
-# partial agg executed EAGERLY at DataFrame-build time on every
-# q_dedup_simhash call — a pure corpus statistic, so it lives in the
-# same per-(session, corpus) cache family as the index artifacts
-# (value is the chosen floor int, not a frame).
-_SIMHASH_FLOOR_CACHE: dict[tuple, int] = {}
-
-
 def _simhash_recall_floor_pct(spark: SparkSession, sf_dir: str) -> int:
     """Pick the simhash recall floor for the corpus family at hand.
 
@@ -773,7 +667,7 @@ def _simhash_recall_floor_pct(spark: SparkSession, sf_dir: str) -> int:
             else _SIMHASH_RECALL_FLOOR_CLOSED_PCT
         )
 
-    return _cached(_SIMHASH_FLOOR_CACHE, spark, sf_dir, probe)
+    return artifact(spark, sf_dir, "simhash_floor", probe)
 
 
 def _pair_recall_check(
@@ -802,6 +696,51 @@ def _pair_recall_check(
             F.count("_hit") * 100 >= F.lit(floor_pct) * F.count(F.lit(1))
         ).alias("recall_floor_met"),
     )
+
+
+def _shingle_overlap(
+    spark: SparkSession,
+    sf_dir: str,
+    a: DataFrame,
+    b: DataFrame,
+    on: F.Column | None = None,
+    ids: tuple[str, str] = ("doc_a", "doc_b"),
+    pair: tuple[F.Column, F.Column] | None = None,
+) -> DataFrame:
+    """The exact shingle-overlap join every n-gram pair query shares:
+    postings ``a`` and ``b`` (``(doc_id, shingle)``, aliased here as
+    ``a``/``b``) joined on the shingle plus ``on``, common shingles
+    counted per pair, then both sides' shingle-set sizes joined in.
+    Returns ``(ids[0], ids[1], n_common, n_a, n_b)``; the pair key is
+    ``(a.doc_id, b.doc_id)`` unless ``pair`` gives other expressions.
+
+    Shuffles on the shingle key, so only pairs sharing ≥1 non-stop
+    shingle are ever materialized — never the n² cross product, and no
+    bucket larger than the DF cap. The size table is one row per
+    document, so its two joins broadcast instead of shuffling pairs."""
+    id_a, id_b = ids
+    cond = F.col("a.shingle") == F.col("b.shingle")
+    sizes = _cached_shingle_sizes(spark, sf_dir)
+    joined = a.alias("a").join(b.alias("b"), cond if on is None else cond & on)
+    if pair is None:
+        grouped = joined.groupBy(
+            F.col("a.doc_id").alias(id_a), F.col("b.doc_id").alias(id_b)
+        )
+    else:
+        # Computed keys are projected first and grouped by name, the
+        # audit's plan shape; grouping on the expressions plans the
+        # same work under generated ``_groupingexpression`` columns.
+        grouped = joined.select(
+            pair[0].alias(id_a), pair[1].alias(id_b)
+        ).groupBy(id_a, id_b)
+    common = grouped.agg(F.count(F.lit(1)).alias("n_common"))
+    na = sizes.select(F.col("doc_id").alias(id_a), F.col("n_sh").alias("n_a"))
+    nb = sizes.select(F.col("doc_id").alias(id_b), F.col("n_sh").alias("n_b"))
+    return common.join(na, id_a).join(nb, id_b)
+
+
+def _jaccard() -> F.Column:
+    return F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
 
 
 def audit_exact_jaccard_pairs(
@@ -842,7 +781,6 @@ def audit_exact_jaccard_pairs(
             table(spark, sf_dir, "documents").count()
         )
     inv = _cached_shingle_index(spark, sf_dir)
-    sizes = _cached_shingle_sizes(spark, sf_dir)
     flagged = inv.withColumn(
         "is_audit", _md5_bucket(F.col("doc_id"), audit_mod) == 0
     )
@@ -856,38 +794,23 @@ def audit_exact_jaccard_pairs(
     # that build side is corpus-sized and OOMs the build; the audit
     # side is O(audit · shingles/doc) by construction, the one side
     # that is ALWAYS broadcastable.
-    a, b = F.broadcast(aud).alias("a"), flagged.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.shingle") == F.col("b.shingle"))
-        & (
-            (F.col("a.doc_id") < F.col("b.doc_id"))
-            | (
-                (F.col("b.doc_id") < F.col("a.doc_id"))
-                & ~F.col("b.is_audit")
-            )
+    pairs = _shingle_overlap(
+        spark,
+        sf_dir,
+        F.broadcast(aud),
+        flagged,
+        (F.col("a.doc_id") < F.col("b.doc_id"))
+        | ((F.col("b.doc_id") < F.col("a.doc_id")) & ~F.col("b.is_audit")),
+        pair=(
+            F.least("a.doc_id", "b.doc_id"),
+            F.greatest("a.doc_id", "b.doc_id"),
         ),
-    ).select(
-        F.least("a.doc_id", "b.doc_id").alias("doc_a"),
-        F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
     )
-
-    common = pairs.groupBy("doc_a", "doc_b").agg(
-        F.count(F.lit(1)).alias("n_common")
-    )
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    return (
-        common.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .where(jac >= _JACCARD_THRESHOLD)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(jac, 6).alias("jaccard"),
-            F.col("n_common").cast("long").alias("n_common"),
-        )
+    return pairs.where(_jaccard() >= _JACCARD_THRESHOLD).select(
+        "doc_a",
+        "doc_b",
+        F.round(_jaccard(), 6).alias("jaccard"),
+        F.col("n_common").cast("long").alias("n_common"),
     )
 
 
@@ -974,41 +897,21 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the declared contract; on this fixture max DF = 7, so it is
     inert and results equal the uncapped computation).
     """
-    # Reused by sizes + both inverted-index sides; the cached index is
-    # already materialized (one shingle pass per session+corpus — see
-    # _cached_shingle_index), so no second checkpoint.
+    # The cached index is already materialized (one shingle pass per
+    # session+corpus), so both sides reuse it with no second checkpoint.
     inv = _cached_shingle_index(spark, sf_dir)
-    sizes = _cached_shingle_sizes(spark, sf_dir)
-
-    a, b = inv.alias("a"), inv.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    pairs = _shingle_overlap(
+        spark, sf_dir, inv, inv, F.col("a.doc_id") < F.col("b.doc_id")
     )
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
     # Threshold on the UNROUNDED ratio (matching the oracle's WHERE),
     # then round only for display/hash stability — ADVICE r4: filtering
     # on the rounded column could admit a pair within 5e-7 of the
     # threshold that the oracle rejects.
-    return (
-        common.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .where(jac >= _JACCARD_THRESHOLD)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(jac, 6).alias("jaccard"),
-            F.col("n_common").cast("long").alias("n_common"),
-        )
+    return pairs.where(_jaccard() >= _JACCARD_THRESHOLD).select(
+        "doc_a",
+        "doc_b",
+        F.round(_jaccard(), 6).alias("jaccard"),
+        F.col("n_common").cast("long").alias("n_common"),
     )
 
 
@@ -1036,36 +939,19 @@ def q_dedup_containment_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     document — the one a containment-dedup policy would drop.
     """
     inv = _cached_shingle_index(spark, sf_dir)
-    sizes = _cached_shingle_sizes(spark, sf_dir)
-    a, b = inv.alias("a"), inv.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    pairs = _shingle_overlap(
+        spark, sf_dir, inv, inv, F.col("a.doc_id") < F.col("b.doc_id")
     )
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
     cont = F.col("n_common") / F.least("n_a", "n_b")
     # Threshold on the UNROUNDED ratio, rounded display column, integer
     # tie-free contained_id pick — the ngram_jaccard conventions.
-    return (
-        common.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .where(cont >= _CONTAINMENT_THRESHOLD)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(cont, 6).alias("containment"),
-            F.when(F.col("n_a") <= F.col("n_b"), F.col("doc_a"))
-            .otherwise(F.col("doc_b"))
-            .alias("contained_id"),
-        )
+    return pairs.where(cont >= _CONTAINMENT_THRESHOLD).select(
+        "doc_a",
+        "doc_b",
+        F.round(cont, 6).alias("containment"),
+        F.when(F.col("n_a") <= F.col("n_b"), F.col("doc_a"))
+        .otherwise(F.col("doc_b"))
+        .alias("contained_id"),
     )
 
 
@@ -1085,34 +971,20 @@ def q_dedup_incremental_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (new_id, corpus_id) pairs, never new×corpus.
     """
     inv = _cached_shingle_index(spark, sf_dir)
-    sizes = _cached_shingle_sizes(spark, sf_dir)
-    new = inv.where(F.col("doc_id") % 2 == 1).alias("n")
-    corpus = inv.where(F.col("doc_id") % 2 == 0).alias("c")
-    common = (
-        new.join(corpus, F.col("n.shingle") == F.col("c.shingle"))
-        .groupBy(
-            F.col("n.doc_id").alias("new_id"),
-            F.col("c.doc_id").alias("corpus_id"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    pairs = _shingle_overlap(
+        spark,
+        sf_dir,
+        inv.where(F.col("doc_id") % 2 == 1),
+        inv.where(F.col("doc_id") % 2 == 0),
+        ids=("new_id", "corpus_id"),
     )
-    na = sizes.select(F.col("doc_id").alias("new_id"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(
-        F.col("doc_id").alias("corpus_id"), F.col("n_sh").alias("n_b")
-    )
-    jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
     # Unrounded threshold before the rounded display column — same
     # oracle-parity rationale as q_dedup_ngram_jaccard (ADVICE r4).
-    return (
-        common.join(na, "new_id")
-        .join(nb, "corpus_id")
-        .where(jac >= _JACCARD_THRESHOLD)
-        .select(
-            "new_id",
-            "corpus_id",
-            F.round(jac, 6).alias("jaccard"),
-            F.col("n_common").cast("long").alias("n_common"),
-        )
+    return pairs.where(_jaccard() >= _JACCARD_THRESHOLD).select(
+        "new_id",
+        "corpus_id",
+        F.round(_jaccard(), 6).alias("jaccard"),
+        F.col("n_common").cast("long").alias("n_common"),
     )
 
 
@@ -1414,15 +1286,6 @@ def _emb_ann_partitions(n_lists: int, c: int) -> int:
     return max(1, min(_EMB_ANN_MAX_PARTITIONS, L))
 
 
-# Multi-assignment table cache, per (session, corpus): the (part,
-# cell, vec_id) assignment is a pure function of the corpus + the
-# geometry rule, is consumed by BOTH sides of the candidate self-join
-# and by both the full and audit grading queries in one round, and at
-# real scale is a persisted index sidecar — same rationale as
-# _IVF_INDEX_CACHE.
-_EMB_MEMBERSHIP_CACHE: dict = {}
-
-
 def _emb_ann_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, part, cell) OR-amplified multi-assignment: every
     corpus vector in its ``_emb_ann_assign()`` nearest cells of each
@@ -1430,7 +1293,6 @@ def _emb_ann_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     + memoized). Partition 0 reuses the cached serving index's
     centroids — one training shared with the top-k path; salts ≥ 1
     train fresh Lloyd optima (3 bounded rounds each, map-only)."""
-    from frinesis_spark.caches import cached
     from frinesis_spark.operators import similarity as sim
 
     def build():
@@ -1466,10 +1328,11 @@ def _emb_ann_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
         memb = parts[0]
         for p in parts[1:]:
             memb = memb.unionByName(p)
-        return memb.localCheckpoint(eager=True)
+        return memb
 
-    return cached(
-        _EMB_MEMBERSHIP_CACHE, spark, sf_dir, build, table="embeddings"
+    return artifact(
+        spark, sf_dir, "emb_membership", build, table="embeddings",
+        checkpoint=True,
     )
 
 

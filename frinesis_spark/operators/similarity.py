@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from frinesis_spark.caches import artifact
 from frinesis_spark.catalog import table
 from frinesis_spark.functions.vectors import (
     cosine_from_norms,
@@ -306,22 +307,18 @@ def _multiprobe(df: DataFrame, id_col: str, emb_col: str) -> DataFrame:
 def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deduped (query_id, neighbor_id) LSH candidate pairs — the
     quantity the recall/efficiency tests measure directly."""
-    from frinesis_spark.caches import cached
-
     q, c = _queries_and_candidates(spark, sf_dir)
     qb = _multiprobe(q, "query_id", "qe")
-    # The corpus bucket table IS the LSH index — built once per
-    # (session, corpus, fingerprint) via the shared artifact memo
-    # (embeddings-keyed: a refreshed embeddings table must invalidate
-    # it exactly like dedup's documents-keyed artifacts).
-    cb = cached(
-        _LSH_INDEX_CACHE,
+    # The corpus bucket table IS the LSH index — a derived artifact
+    # (embeddings-keyed: a refreshed embeddings table invalidates it
+    # exactly like dedup's documents-keyed artifacts).
+    cb = artifact(
         spark,
         sf_dir,
-        lambda: _bucketize(c, "neighbor_id", "ce").localCheckpoint(
-            eager=True
-        ),
+        "lsh_index",
+        lambda: _bucketize(c, "neighbor_id", "ce"),
         table="embeddings",
+        checkpoint=True,
     )
     return (
         F.broadcast(qb)
@@ -530,25 +527,15 @@ def _ivf_centroids(
     return cents
 
 
-# ANN index cache, per (session, corpus dir): an ANN index is BUILT
-# ONCE and queried many times by definition — IVF centroid training
-# (3 Lloyd rounds) and corpus cell assignment, and the LSH corpus
-# bucket table, are pure functions of an immutable corpus, so repeat
-# queries reuse the materialized index instead of retraining. Same
-# statistics-cache pattern as dedup's shingle index; at real scale
-# these are persisted index tables.
-_IVF_INDEX_CACHE: dict[tuple[tuple[str, int], str], tuple] = {}
-_LSH_INDEX_CACHE: dict[tuple[tuple[str, int], str], DataFrame] = {}
-
-
 def ivf_index(spark: SparkSession, sf_dir: str):
     """The IVF index half: (corpus rows tagged with their home cell,
-    trained centroids ndarray), from the per-(session, corpus) cache.
-    Shared by the ANN top-k query here and by ``dedup_embedding_ann``
-    (dedup.py), which probes it corpus×corpus instead of query×corpus
-    — ONE index artifact serves both access patterns, exactly as a
-    persisted production index would."""
-    from frinesis_spark.caches import cached as _memo
+    trained centroids ndarray), a derived artifact. An ANN index is
+    BUILT ONCE and queried many times by definition — centroid
+    training (3 Lloyd rounds) and cell assignment are pure functions
+    of the corpus. Shared by the ANN top-k query here and by
+    ``dedup_embedding_ann`` (dedup.py), which probes it corpus×corpus
+    instead of query×corpus — ONE index artifact serves both access
+    patterns, exactly as a persisted production index would."""
 
     def build():
         _, c = _queries_and_candidates(spark, sf_dir)
@@ -591,8 +578,7 @@ def ivf_index(spark: SparkSession, sf_dir: str):
         ).localCheckpoint(eager=True)
         return cells, cents
 
-    # Embeddings-keyed shared artifact memo (see lsh_candidate_pairs).
-    return _memo(_IVF_INDEX_CACHE, spark, sf_dir, build, table="embeddings")
+    return artifact(spark, sf_dir, "ivf_index", build, table="embeddings")
 
 
 def _ivf_cells_and_probes(spark: SparkSession, sf_dir: str):

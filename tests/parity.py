@@ -44,12 +44,36 @@ def _canon_value(v) -> str:
 
 
 def canonical_rows(df: pd.DataFrame) -> list[tuple[str, ...]]:
+    # Column-wise itertuples, not a per-row ``iloc``: in an all-numeric
+    # frame ``iloc[i]`` builds one float64 row, which turned every int
+    # into a float and compared int64 values above 2**53 on 53 bits.
     cols = sorted(df.columns)
-    rows = [
-        tuple(_canon_value(df.iloc[i][c]) for c in cols) for i in range(len(df))
-    ]
-    rows.sort()
-    return rows
+    return sorted(
+        tuple(_canon_value(v) for v in row)
+        for row in df[cols].itertuples(index=False, name=None)
+    )
+
+
+def plan_text(df) -> str:
+    """The physical plan string of a (not-yet-executed) DataFrame.
+
+    Uses ``queryExecution().executedPlan()`` — under AQE this is the
+    initial compiled plan inside the AdaptiveSparkPlan wrapper, i.e.
+    what Catalyst produced from this code against this data layout,
+    before any runtime re-plan. Planning runs; execution does not.
+
+    Rendered with ``spark.sql.maxMetadataStringLength`` raised (and
+    restored) so long metadata strings (DataFilters, Location, ...)
+    are not cut short with ``...``.
+    """
+    conf = df.sparkSession.conf
+    key = "spark.sql.maxMetadataStringLength"
+    old = conf.get(key)
+    conf.set(key, "10000")
+    try:
+        return df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        conf.set(key, old)
 
 
 def assert_frames_match(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, name: str):

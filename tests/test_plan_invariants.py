@@ -18,7 +18,8 @@ from __future__ import annotations
 
 import pytest
 
-from frinesis_spark import planfp, registry
+from frinesis_spark import registry
+from tests.parity import plan_text
 
 # Queries whose plans legitimately contain a nested-loop/cross join:
 # the declared dimension-only cross (join_cross_dims) and the exact
@@ -37,7 +38,7 @@ def all_plans(spark, sf_dir):
     """Compiled plan text per registered query, one planning pass."""
     out = {}
     for name, fn in registry.queries().items():
-        out[name] = planfp.plan_text(fn(spark, sf_dir))
+        out[name] = plan_text(fn(spark, sf_dir))
     return out
 
 
@@ -171,8 +172,8 @@ def test_shuffle_pin_catches_added_exchange(spark, sf_dir):
     from frinesis_spark import registry
 
     q = registry.queries()["agg_approx_quantile"]
-    base = _count_exchanges(planfp.plan_text(q(spark, sf_dir)))[0]
+    base = _count_exchanges(plan_text(q(spark, sf_dir)))[0]
     extra = _count_exchanges(
-        planfp.plan_text(q(spark, sf_dir).repartition(7))
+        plan_text(q(spark, sf_dir).repartition(7))
     )[0]
     assert extra == base + 1

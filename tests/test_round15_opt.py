@@ -12,17 +12,7 @@ bounded by construction.
 
 from __future__ import annotations
 
-import io
-from contextlib import redirect_stdout
-
-import pytest
-
-
-def _plan_text(df) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from tests.parity import plan_text
 
 
 class TestAuditGraderBuildSide:
@@ -33,10 +23,9 @@ class TestAuditGraderBuildSide:
         Anchored to the shingle-keyed join specifically (ADVICE r15:
         the old whole-plan count could be satisfied by an unrelated
         BuildLeft elsewhere in the cached-index lineage)."""
-        from frinesis_spark import planfp
         from frinesis_spark.operators import dedup as D
 
-        plan = planfp.plan_text(D.audit_exact_jaccard_pairs(spark, sf_dir))
+        plan = plan_text(D.audit_exact_jaccard_pairs(spark, sf_dir))
         shingle_joins = [
             ln
             for ln in plan.splitlines()

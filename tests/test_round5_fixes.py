@@ -54,14 +54,15 @@ def test_session_key_distinguishes_sibling_sessions(spark):
 
 
 def test_caches_are_keyed_by_session_key(spark, sf_dir):
-    """The dedup shingle-index cache stores under the session_key, so a
+    """The shingle-index artifact is held under the session_key, so a
     context restart (different applicationId) misses the cache."""
+    from frinesis_spark import caches
     from frinesis_spark.operators import dedup
 
     dedup._cached_shingle_index(spark, sf_dir)
     # r7: the key grew a corpus-fingerprint slot ("" when the index
     # store is off) so store mode can see corpus refreshes mid-session.
-    assert (session_key(spark), sf_dir, "") in dedup._INDEX_CACHE
+    assert (session_key(spark), sf_dir, "") in caches._MEMO["shingle_index"]
 
 
 def test_minhash_hash_cap_matches_string_cap_stop_set(spark):

@@ -166,26 +166,35 @@ def test_n_keys_counts_keys_with_non_long_values(spark, monkeypatch):
 
 
 def test_clear_derived_caches_resets_and_rebuilds(spark, sf_dir):
-    """bench.py's cold reps rely on clear_derived_caches() actually
-    emptying every derived-artifact cache and the next query
-    transparently rebuilding to the same result."""
-    from frinesis_spark.caches import clear_derived_caches
-    from frinesis_spark.operators import dedup, similarity
+    """bench.py's cold reps and perfbench's cold half rely on
+    clear_derived_caches() emptying EVERY derived artifact the 8
+    cache-backed queries build, returning how many entries it dropped,
+    and the next query transparently rebuilding to the same result."""
+    import bench
+    from frinesis_spark import caches, registry
+    from frinesis_spark.catalog import session_key
+    from frinesis_spark.operators import dedup
 
-    clear_derived_caches()
+    queries = registry.queries()
+    for name in bench.CACHE_BACKED:
+        queries[name](spark, sf_dir)  # building a frame builds its artifacts
+    key = (session_key(spark), sf_dir, "")
+    held = {name for name, memo in caches._MEMO.items() if key in memo}
+    assert held >= {
+        "shingle_index",
+        "shingle_sizes",
+        "minhash_signatures",
+        "simhash_fingerprints",
+        "simhash_floor",
+        "lsh_index",
+        "ivf_index",
+        "emb_membership",
+    }
     before = dedup.q_dedup_ngram_jaccard(spark, sf_dir).collect()
-    assert dedup._INDEX_CACHE  # populated by the run
-    dropped = clear_derived_caches()
-    assert dropped >= 1
-    for d in (
-        dedup._INDEX_CACHE,
-        dedup._SIG_CACHE,
-        dedup._SIZES_CACHE,
-        dedup._SIMHASH_CACHE,
-        similarity._LSH_INDEX_CACHE,
-        similarity._IVF_INDEX_CACHE,
-    ):
-        assert not d
+    n_held = sum(len(memo) for memo in caches._MEMO.values())
+    assert caches.clear_derived_caches() == n_held
+    assert not any(caches._MEMO.values())
+    assert caches.clear_derived_caches() == 0
     after = dedup.q_dedup_ngram_jaccard(spark, sf_dir).collect()
     assert sorted(map(tuple, before)) == sorted(map(tuple, after))
 

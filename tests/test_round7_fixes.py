@@ -219,6 +219,14 @@ def test_index_store_mode_persists_and_avoids_recompute(
     assert rows() == baseline  # store mode, cold: builds + writes
     fp_dirs = list((store / "shingle_index").glob("fp=*"))
     assert len(fp_dirs) == 1 and (fp_dirs[0] / "_SUCCESS").exists()
+    # Only the index and its size table persist; the other artifacts
+    # stay session-local in store mode too.
+    dedup._cached_simhash_fingerprints(spark, sf_dir).count()
+    dedup._simhash_recall_floor_pct(spark, sf_dir)
+    assert sorted(p.name for p in store.iterdir()) == [
+        "shingle_index",
+        "shingle_sizes",
+    ]
 
     # Fingerprint hit: the build path must never run.
     def _poisoned(*a, **k):
@@ -229,6 +237,34 @@ def test_index_store_mode_persists_and_avoids_recompute(
     assert rows() == baseline
     monkeypatch.undo()
     clear_derived_caches()
+
+
+def test_index_store_fingerprints_once_per_lookup(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Store mode computes the corpus fingerprint ONCE per lookup and
+    uses it for both the memo key and the store directory, so the two
+    can never name different corpora (the old store path fingerprinted
+    again for its directory, a second stat sweep per miss)."""
+    from frinesis_spark import caches
+    from frinesis_spark.operators import dedup
+
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_STORE", str(tmp_path / "store"))
+    calls = []
+    real = caches.corpus_fingerprint
+
+    def counting(*a, **k):
+        calls.append(a)
+        return real(*a, **k)
+
+    monkeypatch.setattr(caches, "corpus_fingerprint", counting)
+    caches.clear_derived_caches()
+    dedup._cached_shingle_index(spark, sf_dir)  # miss: build + write
+    assert len(calls) == 1
+    dedup._cached_shingle_index(spark, sf_dir)  # hit
+    assert len(calls) == 2
+    monkeypatch.undo()
+    caches.clear_derived_caches()
 
 
 def test_index_store_refreshes_on_corpus_change(spark, sf_dir, tmp_path, monkeypatch):

@@ -821,18 +821,17 @@ def test_minhash_simhash_budget_subchunk_equality(spark, sf_dir, monkeypatch):
     assert tiny_fp == base_fp
 
 
-def test_artifact_cache_evicts_oldest_not_all():
+def test_artifact_cache_evicts_oldest_not_all(monkeypatch):
     """A 5th distinct corpus must evict ONLY the oldest entry — the
     old clear() degraded alternating-corpus sessions to a 0% hit rate
     (every lookup rebuilt a full index)."""
     from frinesis_spark import caches
+    import frinesis_spark.catalog as cat
 
-    cache: dict = {}
+    monkeypatch.delenv("SPARK_GRAFT_INDEX_STORE", raising=False)
+    monkeypatch.setattr(cat, "session_key", lambda s: ("app", 1))
+    monkeypatch.setattr(caches, "_MEMO", {})
     calls = []
-
-    class FakeSpark:  # session_key needs these two attributes
-        class sparkContext:
-            applicationId = "app"
 
     def build_for(d):
         def b():
@@ -841,19 +840,13 @@ def test_artifact_cache_evicts_oldest_not_all():
 
         return b
 
-    import frinesis_spark.catalog as cat
-
-    orig = cat.session_key
-    cat.session_key = lambda s: ("app", 1)
-    try:
-        for d in ("d1", "d2", "d3", "d4"):
-            caches.cached(cache, FakeSpark, d, build_for(d))
-        assert len(cache) == 4 and calls == ["d1", "d2", "d3", "d4"]
-        caches.cached(cache, FakeSpark, "d5", build_for("d5"))
-        assert len(cache) == 4  # bound holds
-        # d2..d5 survive; only d1 (oldest) was evicted
-        for d in ("d2", "d3", "d4", "d5"):
-            caches.cached(cache, FakeSpark, d, build_for(d))
-        assert calls == ["d1", "d2", "d3", "d4", "d5"]  # all hits
-    finally:
-        cat.session_key = orig
+    for d in ("d1", "d2", "d3", "d4"):
+        caches.artifact(None, d, "evict_probe", build_for(d))
+    assert len(caches._MEMO["evict_probe"]) == 4
+    assert calls == ["d1", "d2", "d3", "d4"]
+    caches.artifact(None, "d5", "evict_probe", build_for("d5"))
+    assert len(caches._MEMO["evict_probe"]) == 4  # bound holds
+    # d2..d5 survive; only d1 (oldest) was evicted
+    for d in ("d2", "d3", "d4", "d5"):
+        caches.artifact(None, d, "evict_probe", build_for(d))
+    assert calls == ["d1", "d2", "d3", "d4", "d5"]  # all hits

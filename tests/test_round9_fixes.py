@@ -128,43 +128,42 @@ def test_codecs_agree_null_safe_on_all_null_acctbal(spark, monkeypatch):
         assert r["codecs_agree"] is True  # never NULL, never False
 
 
-def test_artifact_cache_eviction_is_lru_not_fifo():
-    """A hit must refresh recency: insert d1..d4, re-hit d1, insert d5
-    → d2 (least recently used) is evicted and d1 survives. The FIFO
-    form evicted d1 even though it was the hottest entry (ADVICE r8)."""
+def test_artifact_cache_eviction_is_lru_not_fifo(monkeypatch):
+    """caches.artifact holds at most 4 entries per artifact name and
+    evicts the LEAST RECENTLY USED one: insert d1..d4, re-hit d1,
+    insert d5 → only d2 is evicted, d1 survives its refresh. The old
+    clear() degraded alternating-corpus sessions to a 0% hit rate, and
+    the FIFO form evicted d1 even though it was the hottest entry
+    (ADVICE r8). Another artifact name has its own 4 entries."""
     from frinesis_spark import caches
     import frinesis_spark.catalog as cat
 
-    cache: dict = {}
+    monkeypatch.delenv("SPARK_GRAFT_INDEX_STORE", raising=False)
+    monkeypatch.setattr(cat, "session_key", lambda s: ("app", 1))
+    monkeypatch.setattr(caches, "_MEMO", {})
     calls = []
 
-    class FakeSpark:
-        class sparkContext:
-            applicationId = "app"
-
-    def build_for(d):
-        def b():
+    def get(d, name="lru_probe"):
+        def build():
             calls.append(d)
             return f"artifact-{d}"
 
-        return b
+        return caches.artifact(None, d, name, build)
 
-    orig = cat.session_key
-    cat.session_key = lambda s: ("app", 1)
-    try:
-        for d in ("d1", "d2", "d3", "d4"):
-            caches.cached(cache, FakeSpark, d, build_for(d))
-        caches.cached(cache, FakeSpark, "d1", build_for("d1"))  # hit
-        assert calls == ["d1", "d2", "d3", "d4"]
-        caches.cached(cache, FakeSpark, "d5", build_for("d5"))
-        assert len(cache) == 4
-        # d1 survived its refresh; d2 was the LRU victim.
-        caches.cached(cache, FakeSpark, "d1", build_for("d1"))
-        assert calls == ["d1", "d2", "d3", "d4", "d5"]  # d1 still a hit
-        caches.cached(cache, FakeSpark, "d2", build_for("d2"))
-        assert calls[-1] == "d2"  # d2 was rebuilt → it was evicted
-    finally:
-        cat.session_key = orig
+    for d in ("d1", "d2", "d3", "d4"):
+        assert get(d) == f"artifact-{d}"
+    assert get("d1") == "artifact-d1"  # hit, refreshes d1's recency
+    assert calls == ["d1", "d2", "d3", "d4"]
+    get("d5")
+    assert len(caches._MEMO["lru_probe"]) == 4  # bound holds
+    for d in ("d1", "d3", "d4", "d5"):
+        get(d)
+    assert calls == ["d1", "d2", "d3", "d4", "d5"]  # all hits
+    get("d2")
+    assert calls[-1] == "d2"  # d2 was rebuilt → it was the LRU victim
+    get("d1", name="other")  # a second name does not evict from the first
+    assert len(caches._MEMO["lru_probe"]) == 4
+    assert caches.clear_derived_caches() == 5
 
 
 # --- self-grading dedup (VERDICT r8 item 2) ---------------------------------
@@ -256,18 +255,21 @@ def test_embedding_ann_reuses_cached_ivf_index(spark, sf_dir):
     as the ANN top-k query — one (session, corpus) build, two access
     patterns."""
     import frinesis_spark.operators.similarity as sim
-    from frinesis_spark.caches import clear_derived_caches
+    from frinesis_spark import caches
     from frinesis_spark.operators import dedup
 
     # Full derived-cache reset: since r15 the pair pass ALSO memoizes
     # its multi-assignment table, which would otherwise serve this
-    # call without touching the IVF cache at all (test-order found).
-    clear_derived_caches()
+    # call without touching the IVF index at all (test-order found).
+    caches.clear_derived_caches()
     dedup.embedding_ann_pairs(spark, sf_dir).count()
-    assert len(sim._IVF_INDEX_CACHE) == 1
-    key = next(iter(sim._IVF_INDEX_CACHE))
+    held = caches._MEMO["ivf_index"]
+    assert len(held) == 1
+    (key,) = held
+    value = held[key]
     sim.ann_ivf_topk(spark, sf_dir).count()
-    assert list(sim._IVF_INDEX_CACHE) == [key]  # hit, not a second build
+    assert list(held) == [key]  # hit, not a second build
+    assert held[key] is value
 
 
 # --- manifest store across a REAL process restart (VERDICT r8 item 6) -------
@@ -490,7 +492,7 @@ def test_ivf_probes_clamp_on_tiny_corpus(spark, monkeypatch):
     to the trained centroid count. Both IVF consumers run end-to-end
     on a 5-vector corpus."""
     import frinesis_spark.operators.similarity as sim
-    from frinesis_spark import catalog
+    from frinesis_spark import caches, catalog
     from frinesis_spark.operators import dedup
 
     # Two near-dup pairs + one loner, 8-dim.
@@ -514,7 +516,6 @@ def test_ivf_probes_clamp_on_tiny_corpus(spark, monkeypatch):
             if n == "embeddings"
             else real_table(s, d, n),
         )
-    sim._IVF_INDEX_CACHE.clear()
     try:
         pairs = {
             (r.a_id, r.b_id)
@@ -534,7 +535,9 @@ def test_ivf_probes_clamp_on_tiny_corpus(spark, monkeypatch):
         topk = sim.ann_ivf_topk(spark, "crafted://tinycorpus")
         assert topk.count() > 0
     finally:
-        sim._IVF_INDEX_CACHE.clear()
+        for memo in caches._MEMO.values():  # the crafted corpus's artifacts
+            for key in [k for k in memo if k[1] == "crafted://tinycorpus"]:
+                del memo[key]
 
 
 def _stage_layout(spark, sf_dir, layout):
